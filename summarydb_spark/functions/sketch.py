@@ -36,7 +36,7 @@ from pyspark.sql import functions as F
 # Column construction needs an active SparkContext)
 
 
-def _bit_mask(pos_mod_64: Column) -> Column:
+def bit_mask(pos_mod_64: Column) -> Column:
     pow2 = F.array(
         *[
             F.lit((1 << i) if i < 63 else -(1 << 63)).cast("long")
@@ -46,12 +46,18 @@ def _bit_mask(pos_mod_64: Column) -> Column:
     return F.element_at(pow2, pos_mod_64.cast("int") + 1)
 
 
-def _bloom_positions(value: Column, m_bits: int, k: int) -> Column:
-    """Array of k bit positions via double hashing h1 + i*h2 (Kirsch &
-    Mitzenmacher: two base hashes give k independent-enough probes)."""
+def bloom_position_cols(value: Column, m_bits: int, k: int) -> list:
+    """The k bit positions of ``value`` via double hashing h1 + i*h2
+    (Kirsch & Mitzenmacher: two base hashes give k independent-enough
+    probes)."""
     h1 = F.pmod(F.xxhash64(value), F.lit(m_bits))
     h2 = F.pmod(F.xxhash64(value, F.lit(0x5EED)), F.lit(m_bits - 1)) + 1
-    return F.array(*[F.pmod(h1 + F.lit(i) * h2, F.lit(m_bits)) for i in range(k)])
+    return [F.pmod(h1 + F.lit(i) * h2, F.lit(m_bits)) for i in range(k)]
+
+
+def _bloom_positions(value: Column, m_bits: int, k: int) -> Column:
+    """:func:`bloom_position_cols` as one array column."""
+    return F.array(*bloom_position_cols(value, m_bits, k))
 
 
 def bloom_aggregate(
@@ -83,7 +89,7 @@ def bloom_aggregate(
         .select(
             *gcols,
             (F.col("_pos") / 64).cast("long").alias("_word"),
-            _bit_mask(F.col("_pos") % 64).alias("_mask"),
+            bit_mask(F.col("_pos") % 64).alias("_mask"),
         )
         .groupBy(*gcols, "_word")
         .agg(F.bit_or("_mask").alias("_bits"))
@@ -109,7 +115,7 @@ def bloom_probe_hits(
         positions,
         lambda p: F.coalesce(
             F.element_at(bloom, (p / 64).cast("long")), F.lit(0).cast("long")
-        ).bitwiseAND(_bit_mask(p % 64))
+        ).bitwiseAND(bit_mask(p % 64))
         != 0,
     )
 
@@ -149,7 +155,7 @@ def bloom_contains_dense(
     return F.forall(
         positions,
         lambda p: F.element_at(bits, (p / 64).cast("int") + 1).bitwiseAND(
-            _bit_mask(p % 64)
+            bit_mask(p % 64)
         )
         != 0,
     )

@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from summarydb_spark.operators.summary import SUMMARY_COLS, _bucket_udf_general
+from summarydb_spark.session import local_frame
 from summarydb_spark.windowing import ExpWindowing
 
 _UNIT_COLS = [
@@ -113,8 +114,10 @@ def _counts_df(ref: DataFrame, counts: CountsLike) -> Optional[DataFrame]:
         return counts.select("stream_id", "n")
     if not counts:
         return None
-    return ref.sparkSession.createDataFrame(
-        [(k, int(v)) for k, v in counts.items()], ["stream_id", "n"]
+    return local_frame(
+        ref.sparkSession,
+        [(int(k), int(v)) for k, v in counts.items()],
+        "stream_id long, n long",
     )
 
 

@@ -36,6 +36,8 @@ from pyspark.sql import functions as F
 
 from summarydb_spark.functions import sketch
 from summarydb_spark.operators.estimator import AggResult
+from summarydb_spark.operators.summary import SUMMARY_COLS, summary_aggs
+from summarydb_spark.session import local_frame
 
 BLOOM_M = 1 << 13
 BLOOM_K = 5
@@ -45,80 +47,162 @@ CMS_DEPTH = 4
 CMS_WIDTH = 2048
 
 SKETCH_OPS = ("bloom", "hll", "kll", "cms", "freq")
+#: the sketch store's per-window sketch columns ("freq" reads "cms")
+SKETCH_COLS = ("hll", "kll", "bloom", "cms")
 
 
 def build_sketch_windows(
     ev_bucketed: DataFrame, ops, keep_bucket: bool = False
 ) -> DataFrame:
-    """Per-(stream, canonical-window) sketch rows from bucketed events.
-
-    One hash aggregation for the scalar sketches (hll/kll + window bounds);
-    blooms need an explode so they aggregate separately and join back on
-    the (tiny) window key space.  ``keep_bucket`` retains the bucket column
-    (the incremental maintenance path merges on it).
+    """Per-(stream, canonical-window) sketch rows from bucketed events:
+    ``stream_id, time_start, time_end, window_id, count`` plus one column
+    per op (``freq`` is answered by the ``cms`` state), for every stream.
+    ``keep_bucket`` retains the bucket column (the incremental maintenance
+    path merges on it).  The sketch-only view of :func:`summarize_windows`.
     """
-    # "freq" (frequency queries) is answered by the same count-min state
-    ops = {"cms" if o == "freq" else o for o in ops}
-    # Pre-shuffle on the group keys: the canonical exp2 bucket expression is
-    # a very large CASE tree, and whole-stage codegen cannot split methods
-    # inside TypedImperativeAggregate (hll/kll) update loops — fusing the
-    # two blows the JVM method limit and drops the stage to interpreted
-    # mode.  Repartitioning on the keys satisfies the aggregate's required
-    # distribution, so the bucket projection compiles in its own stage and
-    # the aggregate stage sees plain column refs.
-    ev_bucketed = ev_bucketed.repartition("stream_id", "bucket")
-    # The bloom join below would emit isnotnull(bucket), and predicate
-    # pushdown substitutes the whole (large) bucket expression into that
-    # filter — overflowing the codegen constant pool.  coalesce with a
-    # literal makes the key provably non-nullable, so the null filter is
-    # optimized away instead of pushed down.
-    ev_bucketed = ev_bucketed.withColumn(
-        "bucket", F.coalesce(F.col("bucket"), F.lit(-1).cast("long"))
-    )
-    aggs = [
-        F.min("ts").alias("time_start"),
-        F.max("ts").alias("time_end"),
-        F.min("idx").alias("window_id"),
-        F.count(F.lit(1)).alias("count"),
-    ]
-    if "hll" in ops:
-        aggs.append(
-            F.hll_sketch_agg(F.col("value").cast("string"), F.lit(HLL_LGK)).alias(
-                "hll"
-            )
-        )
-    if "kll" in ops:
-        aggs.append(F.kll_sketch_agg_double("value", F.lit(KLL_K)).alias("kll"))
-    base = ev_bucketed.groupBy("stream_id", "bucket").agg(*aggs)
+    out = summarize_windows(ev_bucketed, {o: None for o in ops})
+    cols = ["stream_id", "time_start", "time_end", "window_id", "count"]
+    cols += [c for c in SKETCH_COLS if c in out.columns]
+    return out.select(*cols, *(["bucket"] if keep_bucket else []))
 
-    if "bloom" in ops:
-        blooms = sketch.bloom_aggregate(
-            ev_bucketed, ["stream_id", "bucket"], "value", m_bits=BLOOM_M, k=BLOOM_K
+
+def summarize_windows(ev_bucketed: DataFrame, sketch_streams=None) -> DataFrame:
+    """One row per (stream, canonical window) from bucketed events: the
+    summary columns (``SUMMARY_COLS``) and the window sketches together.
+
+    ``sketch_streams`` maps a sketch op to the stream ids that declare it
+    (None = every stream); a stream's sketch column is NULL where it does
+    not declare the op, and its rows skip that op's work.
+
+    Plan: one ``groupBy(stream_id, bucket)`` yields count/sum/max/min,
+    the window bounds and the hll/kll sketches.  Bloom words and
+    count-min counters come from ONE explode of each row into its k bloom
+    positions and d count-min cells, then a two-level aggregate (per
+    cell, then per window into the ``bloom``/``cms`` maps) that joins the
+    window rows on the (tiny) window key space.
+    """
+    # sketch column -> declaring stream ids (None: every stream)
+    wanted: dict = {}
+    for op, sids in (sketch_streams or {}).items():
+        op = "cms" if op == "freq" else op
+        if op not in SKETCH_COLS:
+            continue
+        if sids is None or (op in wanted and wanted[op] is None):
+            wanted[op] = None
+        else:
+            wanted[op] = sorted(set(wanted.get(op, [])) | {int(s) for s in sids})
+
+    def gate(op: str):
+        sids = wanted[op]
+        return None if sids is None else F.col("stream_id").isin(sids)
+
+    def gated(op: str, col):
+        g = gate(op)
+        return col if g is None else F.when(g, col)
+
+    key = ["stream_id", "bucket"]
+    aggs = summary_aggs()
+    # the aggregates skip the NULLs an ungated stream feeds them
+    if "hll" in wanted:
+        aggs.append(
+            F.hll_sketch_agg(
+                gated("hll", F.col("value").cast("string")), F.lit(HLL_LGK)
+            ).alias("hll")
         )
-        base = base.join(blooms, ["stream_id", "bucket"])
-    if "cms" in ops:
-        # count-min as one map<long,long> per window, key = depth*width+col;
-        # merging windows = keywise sum (the count/sum monoid shape again)
-        counters = sketch.cms_aggregate(
-            ev_bucketed,
-            ["stream_id", "bucket"],
-            "value",
-            depth=CMS_DEPTH,
-            width=CMS_WIDTH,
-        )
-        cms_maps = (
-            counters.withColumn(
-                "_key", F.col("_depth") * CMS_WIDTH + F.col("_col")
+    if "kll" in wanted:
+        aggs.append(
+            F.kll_sketch_agg_double(gated("kll", F.col("value")), F.lit(KLL_K)).alias(
+                "kll"
             )
-            .groupBy("stream_id", "bucket")
-            .agg(
-                F.map_from_entries(
-                    F.collect_list(F.struct("_key", "cnt"))
-                ).alias("cms")
-            )
         )
-        base = base.join(cms_maps, ["stream_id", "bucket"])
-    return base if keep_bucket else base.drop("bucket")
+    maps = [op for op in ("bloom", "cms") if op in wanted]
+    if maps:
+        # a non-nullable key: the join below would otherwise add an
+        # isnotnull(bucket) filter, and predicate pushdown substitutes the
+        # whole (large) bucket expression into it
+        ev_bucketed = ev_bucketed.withColumn(
+            "bucket", F.coalesce(F.col("bucket"), F.lit(-1).cast("long"))
+        )
+    out = ev_bucketed.groupBy(*key).agg(*aggs).withColumn(
+        "window_id", F.col("count_start")
+    )
+    if maps:
+        out = out.join(_bloom_cms_maps(ev_bucketed, maps, gate), key, "left")
+    sketch_cols = [gated(op, F.col(op)).alias(op) for op in SKETCH_COLS if op in wanted]
+    return out.select(*SUMMARY_COLS, *sketch_cols, "bucket")
+
+
+def _bloom_cms_maps(ev_bucketed: DataFrame, maps, gate) -> DataFrame:
+    """Per-window ``bloom`` (word -> bits) and ``cms`` (depth*width+col ->
+    count) maps from one shared explode.  Each row becomes one entry per
+    bloom position (kind 0) and per count-min row (kind 1: its cell);
+    entries aggregate per (window, kind, key) — bit_or of the position's
+    bit for bloom words, a count for cms cells — and then per window into
+    maps.  Map layout and hashes are those of ``functions.sketch``
+    (bloom_aggregate, cms_aggregate, cms_probe_key), which the query paths
+    probe.  Plain array/struct expressions only: a lambda (transform,
+    filter) is evaluated outside whole-stage codegen, row by row."""
+    value = F.col("value")
+    arrays = {}
+    if "bloom" in maps:
+        arrays["bloom"] = [
+            F.struct(F.lit(0).alias("kind"), p.alias("raw"))
+            for p in sketch.bloom_position_cols(value, BLOOM_M, BLOOM_K)
+        ]
+    if "cms" in maps:
+        arrays["cms"] = [
+            F.struct(
+                F.lit(1).alias("kind"),
+                sketch.cms_probe_key(value, i, CMS_WIDTH).alias("raw"),
+            )
+            for i in range(CMS_DEPTH)
+        ]
+    # a stream explodes only the entries of the ops it declares (a NULL
+    # array explodes to nothing).  The gate sits inside the generator,
+    # not in a row filter: a filter on stream_id would be pushed below
+    # the index window into the scan, and the branch could then no longer
+    # share the events exchange with the window aggregation.
+    gates = {op: gate(op) for op in maps}
+    if all(g is None for g in gates.values()):
+        entries = F.array(*[e for op in maps for e in arrays[op]])
+    else:
+        on = {op: F.lit(True) if g is None else g for op, g in gates.items()}
+        entries = None
+        if len(maps) == 2:
+            entries = F.when(
+                on["bloom"] & on["cms"],
+                F.array(*arrays["bloom"], *arrays["cms"]),
+            )
+        for op in maps:
+            arr = F.array(*arrays[op])
+            entries = (
+                F.when(on[op], arr) if entries is None else entries.when(on[op], arr)
+            )
+    kinds = {"bloom": 0, "cms": 1}
+    cells = ev_bucketed.select("stream_id", "bucket", F.inline(entries))
+    bloom = F.col("kind") == 0
+    cells = (
+        cells.select(
+            "stream_id",
+            "bucket",
+            "kind",
+            F.when(bloom, (F.col("raw") / 64).cast("long"))
+            .otherwise(F.col("raw"))
+            .alias("key"),
+            F.when(bloom, sketch.bit_mask(F.col("raw") % 64)).alias("mask"),
+        )
+        .groupBy("stream_id", "bucket", "kind", "key")
+        .agg(F.bit_or("mask").alias("_bits"), F.count(F.lit(1)).alias("_n"))
+    )
+    kv = F.struct("key", F.when(bloom, F.col("_bits")).otherwise(F.col("_n")))
+    return cells.groupBy("stream_id", "bucket").agg(
+        *[
+            F.map_from_entries(
+                F.collect_list(F.when(F.col("kind") == kinds[op], kv))
+            ).alias(op)
+            for op in maps
+        ]
+    )
 
 
 _RANGE_KEY = ["stream_id", "qid", "t0", "t1"]
@@ -225,8 +309,8 @@ def query_membership(
     for r in rows:
         for w, bits in (r["bloom"] or {}).items():
             merged[w] = merged.get(w, 0) | bits
-    spark = sketches.sparkSession
-    probe = spark.createDataFrame(
+    probe = local_frame(
+        sketches.sparkSession,
         [(list(merged.keys()), list(merged.values()))],
         "ks array<long>, vs array<long>",
     ).select(F.map_from_arrays("ks", "vs").alias("bloom"))
@@ -258,8 +342,8 @@ def query_frequency(
         for k, v in (r["cms"] or {}).items():
             merged[k] = merged.get(k, 0) + v
     # probe JVM-side so the hash matches the build-side xxhash64
-    spark = sketches.sparkSession
-    probe = spark.createDataFrame(
+    probe = local_frame(
+        sketches.sparkSession,
         [(list(merged.keys()), list(merged.values()))],
         "ks array<long>, vs array<long>",
     ).select(F.map_from_arrays("ks", "vs").alias("cms"))
@@ -504,7 +588,8 @@ def batched_sketch_requests(
     ``StreamingSummarizer.query_many_sketch``.
     """
     if not requests:
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [],
             "stream_id long, qid long, op string, t0 long, t1 long, "
             "value double, error double",
@@ -536,7 +621,8 @@ def batched_sketch_requests(
             # way append_pairs encoded them (engine.generic_member_key)
             from summarydb_spark.engine import generic_member_key
 
-            rdf = spark.createDataFrame(
+            rdf = local_frame(
+                spark,
                 [
                     (s, q, t0, t1, generic_member_key(a))
                     for s, q, t0, t1, a in rows
@@ -544,7 +630,8 @@ def batched_sketch_requests(
                 "stream_id long, qid long, t0 long, t1 long, member double",
             )
         else:
-            rdf = spark.createDataFrame(
+            rdf = local_frame(
+                spark,
                 [(s, q, t0, t1) for s, q, t0, t1, _a in rows],
                 "stream_id long, qid long, t0 long, t1 long",
             )

@@ -11,8 +11,10 @@ For exponential base 2 (the reference's default config) bucket assignment is
 a closed-form integer/bit expression (windowing.exp2_bucket_sql) — pure
 whole-stage-codegen column math, no UDF, no driver state, valid at any N.
 For general sequences the canonical boundaries are simulated on the driver
-(O(#windows) result size) and binned with a vectorized Arrow-batched pandas
-UDF (np.searchsorted, O(log W) per row).
+(O(#windows) result size) and binned as literal boundary arrays in JVM
+expressions when the stream sizes are few enough to enumerate, else with a
+vectorized Arrow-batched pandas UDF (np.searchsorted, O(log W) per row).
+``bucketed_configs`` buckets streams under several policies in one pass.
 
 Scale notes (100 TB):
 - the per-stream insertion index uses a window function, which shuffles by
@@ -37,6 +39,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from summarydb_spark.session import local_frame
 from summarydb_spark.windowing import (
     ExpWindowing,
     canonical_boundaries,
@@ -88,7 +91,8 @@ def clamp_monotonic(
         if not isinstance(last_ts, DataFrame):
             if not last_ts:
                 return df.withColumn(ts_col, clamped).drop("_i")
-            last_ts = df.sparkSession.createDataFrame(
+            last_ts = local_frame(
+                df.sparkSession,
                 [(k, int(v)) for k, v in last_ts.items()],
                 df.select(stream_col).schema.add("last_ts", "long"),
             )
@@ -283,9 +287,10 @@ def _jvm_boundary_bucket(
     #{b : b <= idx} — exactly searchsorted(boundaries, idx, 'right')-1,
     the same binning the pandas UDF computes, with no Python worker and
     no Arrow transfer in the ingest pass.  A stream size that was not
-    enumerated at plan time (a nondeterministic upstream changed the
-    counts between the enumeration job and the main pass) raises
-    loudly instead of binning garbage."""
+    enumerated at plan time (the registry's size disagrees with the
+    stream's events, or a nondeterministic upstream changed the counts
+    between the enumeration job and the main pass) raises loudly
+    instead of binning garbage."""
     expr = None
     for nn in ns:
         bnds = canonical_boundaries(windowing, int(nn), buffer_size)
@@ -293,15 +298,17 @@ def _jvm_boundary_bucket(
         bucket = F.size(F.filter(arr, lambda b: b <= F.col(idx_col)))
         cond = F.col(n_col) == int(nn)
         expr = F.when(cond, bucket) if expr is None else expr.when(cond, bucket)
-    return expr.otherwise(
-        F.raise_error(
-            F.concat(
-                F.lit("stream size "),
-                F.col(n_col).cast("string"),
-                F.lit(" was not enumerated at plan time (nondeterministic input?)"),
-            )
+    guard = F.raise_error(
+        F.concat(
+            F.lit("stream size "),
+            F.col(n_col).cast("string"),
+            F.lit(
+                " was not enumerated at plan time (registry size out of date,"
+                " or nondeterministic input?)"
+            ),
         )
-    ).cast("long")
+    )
+    return (guard if expr is None else expr.otherwise(guard)).cast("long")
 
 
 def _bucket_udf_general(windowing, buffer_size: int):
@@ -312,7 +319,9 @@ def _bucket_udf_general(windowing, buffer_size: int):
     from the ``n`` column, memoized per distinct n per python worker — no
     driver-collected per-stream dict, no O(#streams) closure state.  Streams
     sharing a count share one boundary array; the windowing policy itself is
-    a few bytes in the serialized closure."""
+    a few bytes in the serialized closure.  Rows with a NULL ``n`` (rows of
+    another windowing config in a multi-config pass) bin to -1 without a
+    boundary replay."""
     memo: dict = {}
 
     def bounds_for(nn: int) -> np.ndarray:
@@ -327,16 +336,44 @@ def _bucket_udf_general(windowing, buffer_size: int):
 
     @pandas_udf("long")
     def bucket_of(idx: pd.Series, n: pd.Series) -> pd.Series:
-        out = np.empty(len(idx), dtype=np.int64)
+        out = np.full(len(idx), -1, dtype=np.int64)
         iv = idx.to_numpy()
+        valid = n.notna().to_numpy()
         nv = n.to_numpy()
-        for nn in pd.unique(nv):
-            mask = nv == nn
+        for nn in pd.unique(nv[valid]):
+            mask = valid & (nv == nn)
             # bucket in oldest->newest numbering
             out[mask] = np.searchsorted(bounds_for(int(nn)), iv[mask], side="right") - 1
         return pd.Series(out)
 
     return bucket_of
+
+
+def _is_exp2(windowing, buffer_size: int) -> bool:
+    return (
+        isinstance(windowing, ExpWindowing)
+        and windowing.base == 2.0
+        and buffer_size <= 0
+    )
+
+
+def _enumerate_sizes(events: DataFrame, stream_col: str) -> list:
+    """Distinct per-stream sizes of ``events``: one tiny count-distinct job
+    over the RAW events (map-side partial agg — the window/index stage is
+    not re-executed).  LIMIT N+1 bounds the driver transfer: a
+    heterogeneous corpus with millions of distinct sizes ships at most
+    513 rows before the caller's budget check routes it to the UDF (an
+    unbounded collect here would pay an O(#distinct-sizes) driver stall
+    exactly in the regime the UDF fallback exists for)."""
+    return sorted(
+        int(r["_n_"])
+        for r in events.groupBy(F.col(stream_col))
+        .agg(F.count(F.lit(1)).alias("_n_"))
+        .select("_n_")
+        .distinct()
+        .limit(JVM_BIN_MAX_DISTINCT_N + 1)
+        .collect()
+    )
 
 
 def bucketed_events(
@@ -352,7 +389,48 @@ def bucketed_events(
 ) -> DataFrame:
     """Events annotated with per-stream insertion index ``idx``, stream
     size ``n`` and canonical decay ``bucket`` — the shared first stage of
-    the summary build and any per-window sketch build."""
+    the summary build and any per-window sketch build.  Single-config
+    form of :func:`bucketed_configs`; a general policy pays one
+    size-enumeration job."""
+    return bucketed_configs(
+        events,
+        [(windowing, buffer_size, None, None)],
+        stream_col=stream_col,
+        ts_col=ts_col,
+        value_col=value_col,
+        order_cols=order_cols,
+        index_mode=index_mode,
+    )
+
+
+def bucketed_configs(
+    events: DataFrame,
+    configs,
+    *,
+    stream_col: str = "stream_id",
+    ts_col: str = "ts",
+    value_col: str = "value",
+    order_cols: tuple = (),
+    index_mode: str = "window",
+) -> DataFrame:
+    """:func:`bucketed_events` for streams under several windowing
+    configs in ONE pass: one index window over all events, then one
+    projection whose ``bucket`` is a CASE over the configs.
+
+    ``configs``: ``(windowing, buffer_size, stream_ids, sizes)`` tuples.
+    ``stream_ids`` selects the config's streams (None = every row; only
+    for a single config).  ``sizes`` are the config's stream sizes when
+    known — the JVM boundary literals are built from them, and a stream
+    whose actual size is missing raises in the binning guard; None
+    enumerates them with one job.
+
+    Bucket assignment per config:
+    - exp(2) without buffer: the closed form (staged columns, computed
+      once for all rows);
+    - a driver-enumerable size set (``JVM_BIN_MAX_*``): literal boundary
+      arrays in JVM expressions;
+    - otherwise the executor-memoized pandas UDF.
+    """
     ev = _with_index(
         events.select(
             F.col(stream_col).alias("stream_id"),
@@ -365,56 +443,56 @@ def bucketed_events(
         order_cols,
         index_mode=index_mode,
     )
-
-    if isinstance(windowing, ExpWindowing) and windowing.base == 2.0 and buffer_size <= 0:
-        return with_exp2_bucket(ev, "idx", "n", "bucket")
-    # JVM boundary binning for driver-enumerable size sets: one tiny
-    # count-distinct job over the RAW events (map-side partial agg — the
-    # window/index stage is not re-executed) enumerates the per-stream
-    # sizes; each size's canonical boundaries become an O(log n) array
-    # literal and the binning stays entirely JVM-side.  Falls back to
-    # the executor-memoized pandas UDF when the size set is too large to
-    # enumerate or the total replay cost exceeds the driver budget.
-    # LIMIT N+1 bounds the driver transfer: a heterogeneous corpus with
-    # millions of distinct sizes ships at most 513 rows before the
-    # len() check routes it to the UDF (round-7 review finding — an
-    # unbounded collect here would pay an O(#distinct-sizes) driver
-    # stall exactly in the regime the UDF fallback exists for)
-    ns = sorted(
-        int(r["_n_"])
-        for r in events.groupBy(F.col(stream_col))
-        .agg(F.count(F.lit(1)).alias("_n_"))
-        .select("_n_")
-        .distinct()
-        .limit(JVM_BIN_MAX_DISTINCT_N + 1)
-        .collect()
-    )
-    if (
-        ns
-        and len(ns) <= JVM_BIN_MAX_DISTINCT_N
-        and sum(ns) <= JVM_BIN_MAX_TOTAL_REPLAY
-    ):
-        return ev.withColumn(
-            "bucket", _jvm_boundary_bucket(windowing, buffer_size, ns)
+    if any(_is_exp2(w, buf) for w, buf, _s, _n in configs):
+        ev = with_exp2_bucket(ev, "idx", "n", "_exp2_bucket")
+    bucket = None
+    for windowing, buf, sids, ns in configs:
+        member = None if sids is None else F.col("stream_id").isin([int(s) for s in sids])
+        if _is_exp2(windowing, buf):
+            col = F.col("_exp2_bucket")
+        else:
+            if ns is None:
+                ns = _enumerate_sizes(events, stream_col)
+            ns = sorted({int(x) for x in ns if x > 0})
+            if len(ns) <= JVM_BIN_MAX_DISTINCT_N and sum(ns) <= JVM_BIN_MAX_TOTAL_REPLAY:
+                col = _jvm_boundary_bucket(windowing, buf, ns)
+            else:
+                # NULL n for other configs' rows: the UDF skips them
+                n = F.col("n") if member is None else F.when(member, F.col("n"))
+                col = _bucket_udf_general(windowing, buf)(F.col("idx"), n)
+        if member is None:  # a single config over every row
+            return ev.withColumn("bucket", col).drop("_exp2_bucket")
+        bucket = F.when(member, col) if bucket is None else bucket.when(member, col)
+    guard = F.raise_error(
+        F.concat(
+            F.lit("stream "),
+            F.col("stream_id").cast("string"),
+            F.lit(" has no windowing config"),
         )
-    udf = _bucket_udf_general(windowing, buffer_size)
-    return ev.withColumn("bucket", udf(F.col("idx"), F.col("n")))
+    )
+    return ev.withColumn("bucket", bucket.otherwise(guard)).drop("_exp2_bucket")
+
+
+def summary_aggs() -> list:
+    """The per-window summary aggregates over bucketed events (window
+    bounds, insertion-index span, count/sum/max/min)."""
+    return [
+        F.min("ts").alias("time_start"),
+        F.max("ts").alias("time_end"),
+        F.min("idx").alias("count_start"),
+        F.max("idx").alias("count_end"),
+        F.count(F.lit(1)).alias("count"),
+        F.sum("value").alias("sum"),
+        F.max("value").alias("max"),
+        F.min("value").alias("min"),
+    ]
 
 
 def summarize_bucketed(ev: DataFrame) -> DataFrame:
     """groupBy monoid merge of bucketed events into ``SUMMARY_COLS``."""
     return (
         ev.groupBy("stream_id", "bucket")
-        .agg(
-            F.min("ts").alias("time_start"),
-            F.max("ts").alias("time_end"),
-            F.min("idx").alias("count_start"),
-            F.max("idx").alias("count_end"),
-            F.count(F.lit(1)).alias("count"),
-            F.sum("value").alias("sum"),
-            F.max("value").alias("max"),
-            F.min("value").alias("min"),
-        )
+        .agg(*summary_aggs())
         .withColumn("window_id", F.col("count_start"))
         .select(*SUMMARY_COLS)
     )

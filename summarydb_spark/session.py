@@ -63,3 +63,29 @@ def get_spark(
         .config("spark.ui.port", os.environ.get("SPARK_GRAFT_UI_PORT", "4050"))
         .getOrCreate()
     )
+
+
+def local_frame(spark: SparkSession, rows, schema):
+    """DataFrame over driver-side ``rows`` (tuples in ``schema`` order),
+    built through Arrow.
+
+    ``createDataFrame(list)`` pickles every row into an RDD that Python
+    workers must deserialize again when a job first reads it; an Arrow
+    table goes to the JVM as columnar batches, so the jobs that read
+    range frames, probe maps, landmark points and the pending append
+    buffer start no Python worker.  ``schema`` is a StructType or a DDL
+    string; an empty ``rows`` gives an empty frame of that schema."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType, _parse_datatype_string
+
+    if not isinstance(schema, StructType):
+        schema = _parse_datatype_string(schema)
+    arrow_schema = to_arrow_schema(schema)
+    rows = list(rows)
+    cols = list(zip(*rows)) if rows else [() for _ in schema.fields]
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)

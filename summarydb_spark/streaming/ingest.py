@@ -54,6 +54,7 @@ from pyspark.sql import functions as F
 
 from summarydb_spark.operators.incremental import merge_summary_increment
 from summarydb_spark.operators.summary import SUMMARY_COLS
+from summarydb_spark.session import local_frame
 
 
 def _versions(state_dir: str) -> list[int]:
@@ -106,7 +107,8 @@ def load_state_df(
         # oldest layout: counters in meta.json (small by definition)
         counts = {int(k): int(n) for k, n in meta["counts"].items()}
         last_ts = {int(k): int(n) for k, n in meta.get("last_ts", {}).items()}
-        state = spark.createDataFrame(
+        state = local_frame(
+            spark,
             [(k, n, last_ts.get(k)) for k, n in counts.items()],
             "stream_id long, n long, last_ts long",
         )
@@ -364,11 +366,12 @@ class StreamingSummarizer:
 
         summary = self.summary()
         if summary is None:
-            summary = self.spark.createDataFrame(
-                [], "stream_id long, time_start long, time_end long, "
+            summary = local_frame(
+                self.spark, [], "stream_id long, time_start long, time_end long, "
                 "count double, sum double, max double, min double"
             )
-        ranges_df = self.spark.createDataFrame(
+        ranges_df = local_frame(
+            self.spark,
             [
                 (int(s), i, int(t0), int(t1))
                 for i, (s, t0, t1) in enumerate(triples)
