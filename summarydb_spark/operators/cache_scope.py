@@ -3,13 +3,13 @@
 Two operator families persist small internal relations while one query
 plan consumes them from several aliased branches (where AQE exchange
 reuse cannot fire): the dedup guards (``functions.dedup._GUARD_PERSISTED``)
-and the two-phase ranker (``operators.shuffle_tools._RANK_PERSISTED``).
-Engine code whose one relation feeds several actions (``SummaryDB.flush``
+and the two-phase ranker (``operators.shuffle_tools._RANK_PERSISTED``);
+engine code whose one relation feeds several actions (``SummaryDB.flush``
 writes the summary and the sketch store from one window relation)
-persists it with :func:`persist_scoped`.
-Those persists are load-bearing WITHIN one query but must not outlive
-it: a long-lived session issuing many dedup/rank queries would otherwise
-accumulate one CacheManager entry + its block-manager blocks per query
+persists it with :func:`persist_scoped`.  Those persists are
+load-bearing WITHIN one query but must not outlive it: a long-lived
+session issuing many dedup/rank queries would otherwise accumulate one
+CacheManager entry + its block-manager blocks per query
 (measured round 10: late-suite queries absorbed the lookup/GC cost of
 hundreds of stale entries).
 
