@@ -36,10 +36,6 @@ from summarydb_spark.operators.estimator import (
     select_landmark_windows,
     select_summary_windows,
 )
-from summarydb_spark.operators.cache_scope import (
-    persist_scoped,
-    transient_cache_scope,
-)
 from summarydb_spark.operators.sketch_windows import (
     SKETCH_COLS,
     SKETCH_OPS,
@@ -951,14 +947,6 @@ class SummaryDB:
             landmark_points_view="sdb_lmk_points",
         )
 
-    # a flush with dirty sketch streams persists its window relation for
-    # the two store writes only from this many dirty events up: below it,
-    # computing the relation twice costs less CPU than the columnar cache
-    # (24 streams x 400 events: cold flush 18.4-20.2 s CPU streamed vs
-    # 19.7-22.4 s persisted; level at 24 x 8,000 to 24 x 24,000 events,
-    # where the persisted flush's wall is 20% lower)
-    FLUSH_PERSIST_MIN_EVENTS = 200_000
-
     # appended pairs buffer on the driver up to this many rows before
     # spilling to parquet; bounds driver memory under append-heavy loads
     # while keeping flush-time file count O(streams), not O(append calls)
@@ -1537,17 +1525,15 @@ class SummaryDB:
         streams in one pass.
 
         The dirty streams' events are read once.  One index window numbers
-        them and one projection buckets every windowing config
+        them and one bucketing step covers every windowing config
         (``bucketed_configs``); the stream sizes that the boundary binning
         needs come from the registry (``meta.n``), and the JVM binning
         guard raises if a stream's events disagree with them.  One
         ``groupBy(stream_id, bucket)`` then yields the summary columns and
-        each stream's declared sketches (``summarize_windows``).  When
-        sketch streams are dirty, that window relation feeds both store
-        versions; from ``FLUSH_PERSIST_MIN_EVENTS`` dirty events up it is
-        persisted once for the flush (``persist_scoped``), below that
-        each write recomputes it.  A summary-only flush streams it into
-        the summary write.
+        each stream's declared sketches (``summarize_windows``).  Both
+        store versions are written from that window relation; it is not
+        cached, so a flush with dirty sketch streams computes it once per
+        write.
 
         COMPUTE is incremental (only dirty streams re-summarize; clean
         streams' rows are carried over with a scan-copy of the
@@ -1593,29 +1579,24 @@ class SummaryDB:
                 sketch_streams.setdefault(op, []).append(s.meta.stream_id)
         ev = self.events().where(F.col("stream_id").isin(dirty_sids))
         old_stores = [self._stores.get("summary"), self._stores.get("sketches")]
-        with transient_cache_scope():
-            windows = summarize_windows(
-                bucketed_configs(ev, configs, order_cols=("seq",)), sketch_streams
+        windows = summarize_windows(
+            bucketed_configs(ev, configs, order_cols=("seq",)), sketch_streams
+        )
+        self._stores["summary"] = self._write_store_version(
+            "summary", windows.select(*SUMMARY_COLS), old_stores[0], dirty_sids
+        )
+        if sketch_streams:
+            sk_sids = sorted({sid for sids in sketch_streams.values() for sid in sids})
+            sk_cols = [c for c in SKETCH_COLS if c in windows.columns]
+            self._stores["sketches"] = self._write_store_version(
+                "sketches",
+                windows.where(F.col("stream_id").isin(sk_sids)).select(
+                    "stream_id", "time_start", "time_end", "window_id", "count",
+                    *sk_cols,
+                ),
+                old_stores[1],
+                dirty_sids,
             )
-            if sketch_streams and (
-                sum(s.meta.n for s in targets) >= self.FLUSH_PERSIST_MIN_EVENTS
-            ):
-                windows = persist_scoped(windows)
-            self._stores["summary"] = self._write_store_version(
-                "summary", windows.select(*SUMMARY_COLS), old_stores[0], dirty_sids
-            )
-            if sketch_streams:
-                sk_sids = sorted({sid for sids in sketch_streams.values() for sid in sids})
-                sk_cols = [c for c in SKETCH_COLS if c in windows.columns]
-                self._stores["sketches"] = self._write_store_version(
-                    "sketches",
-                    windows.where(F.col("stream_id").isin(sk_sids)).select(
-                        "stream_id", "time_start", "time_end", "window_id", "count",
-                        *sk_cols,
-                    ),
-                    old_stores[1],
-                    dirty_sids,
-                )
         for s in targets:
             s.meta.dirty = False
         self._save_registry()  # the commit point: pointers + dirty flags

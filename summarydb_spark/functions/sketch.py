@@ -36,7 +36,7 @@ from pyspark.sql import functions as F
 # Column construction needs an active SparkContext)
 
 
-def bit_mask(pos_mod_64: Column) -> Column:
+def _bit_mask(pos_mod_64: Column) -> Column:
     pow2 = F.array(
         *[
             F.lit((1 << i) if i < 63 else -(1 << 63)).cast("long")
@@ -46,7 +46,7 @@ def bit_mask(pos_mod_64: Column) -> Column:
     return F.element_at(pow2, pos_mod_64.cast("int") + 1)
 
 
-def bloom_position_cols(value: Column, m_bits: int, k: int) -> list:
+def _bloom_position_cols(value: Column, m_bits: int, k: int) -> list:
     """The k bit positions of ``value`` via double hashing h1 + i*h2
     (Kirsch & Mitzenmacher: two base hashes give k independent-enough
     probes)."""
@@ -56,8 +56,7 @@ def bloom_position_cols(value: Column, m_bits: int, k: int) -> list:
 
 
 def _bloom_positions(value: Column, m_bits: int, k: int) -> Column:
-    """:func:`bloom_position_cols` as one array column."""
-    return F.array(*bloom_position_cols(value, m_bits, k))
+    return F.array(*_bloom_position_cols(value, m_bits, k))
 
 
 def bloom_aggregate(
@@ -76,29 +75,12 @@ def bloom_aggregate(
     past the JVM 64KB method limit at large m (dense construction at
     m=2^16 made whole-stage codegen bail to interpreted mode).
 
-    Plan shape: per-row k positions (codegen) -> explode -> hash-aggregate
-    ``bit_or`` per (group, word) -> map_from_entries per group.  Both
-    aggregates combine map-side, so shuffled volume is ~ (#groups x
-    #distinct words), independent of row count.
+    Plan: :func:`sketch_maps` with only the bloom map — one explode of
+    the k positions, ``bit_or`` per (group, word), then map_from_entries
+    per group.  Both aggregates combine map-side, so shuffled volume is
+    ~ (#groups x #distinct words), independent of row count.
     """
-    assert m_bits % 64 == 0
-    gcols = list(group_cols)
-    pos = F.explode(_bloom_positions(F.col(value_col), m_bits, k)).alias("_pos")
-    words = (
-        df.select(*gcols, pos)
-        .select(
-            *gcols,
-            (F.col("_pos") / 64).cast("long").alias("_word"),
-            bit_mask(F.col("_pos") % 64).alias("_mask"),
-        )
-        .groupBy(*gcols, "_word")
-        .agg(F.bit_or("_mask").alias("_bits"))
-    )
-    return words.groupBy(*gcols).agg(
-        F.map_from_entries(F.collect_list(F.struct("_word", "_bits"))).alias(
-            "bloom"
-        )
-    )
+    return sketch_maps(df, group_cols, value_col, bloom=(m_bits, k))
 
 
 def bloom_probe_hits(
@@ -115,7 +97,7 @@ def bloom_probe_hits(
         positions,
         lambda p: F.coalesce(
             F.element_at(bloom, (p / 64).cast("long")), F.lit(0).cast("long")
-        ).bitwiseAND(bit_mask(p % 64))
+        ).bitwiseAND(_bit_mask(p % 64))
         != 0,
     )
 
@@ -155,7 +137,7 @@ def bloom_contains_dense(
     return F.forall(
         positions,
         lambda p: F.element_at(bits, (p / 64).cast("int") + 1).bitwiseAND(
-            bit_mask(p % 64)
+            _bit_mask(p % 64)
         )
         != 0,
     )
@@ -184,11 +166,96 @@ def _cms_col(value: Column, depth_i: int, width: int) -> Column:
 
 def cms_probe_key(value: Column, depth_i: int, width: int) -> Column:
     """Flattened ``depth*width + col`` key of ``value`` in a per-window CMS
-    map (operators/sketch_windows.py builds the map with exactly this
-    layout).  Build and probe MUST share the hash definition: a probe with
-    a drifted seed reads absent keys, and the ``coalesce(..., 0)`` miss
+    map (:func:`sketch_maps` builds the map with exactly this layout).
+    Build and probe MUST share the hash definition: a probe with a
+    drifted seed reads absent keys, and the ``coalesce(..., 0)`` miss
     default silently collapses every estimate to 0."""
     return F.lit(depth_i * width) + _cms_col(value, depth_i, width)
+
+
+def sketch_maps(
+    df: DataFrame,
+    group_cols: Sequence[str],
+    value_col: str,
+    *,
+    bloom: tuple | None = None,
+    cms: tuple | None = None,
+    gates: dict | None = None,
+) -> DataFrame:
+    """Per-group ``bloom`` (word -> 64-bit word, the
+    :func:`bloom_aggregate` layout) and/or ``cms`` (``depth*width + col``
+    -> count, the :func:`cms_probe_key` layout) maps from ONE explode.
+
+    ``bloom=(m_bits, k)`` and ``cms=(depth, width)`` select the maps.
+    ``gates`` optionally maps ``"bloom"``/``"cms"`` to a boolean column:
+    a row contributes to that map only where it holds (a NULL entry array
+    explodes to nothing); a group with no entries for one map gets an
+    empty map there, and a group with no entries at all gets no row.  The
+    gate sits inside the generator, not in a row filter: a
+    filter on a partitioning column is pushed below window operators into
+    the scan, and the maps' branch could then no longer share an upstream
+    exchange with the caller's other aggregations.
+
+    Each row becomes one entry per bloom position (kind 0) and per
+    count-min row (kind 1: its cell); entries aggregate per (group, kind,
+    key) — ``bit_or`` of the position's bit for bloom words, a count for
+    cms cells — and then per group into the maps.  Plain array/struct
+    expressions only: a lambda (transform, filter) is evaluated outside
+    whole-stage codegen, row by row."""
+    gcols = list(group_cols)
+    value = F.col(value_col)
+    arrays = {}
+    if bloom is not None:
+        m_bits, k = bloom
+        assert m_bits % 64 == 0
+        arrays["bloom"] = [
+            F.struct(F.lit(0).alias("kind"), p.alias("raw"))
+            for p in _bloom_position_cols(value, m_bits, k)
+        ]
+    if cms is not None:
+        depth, width = cms
+        arrays["cms"] = [
+            F.struct(F.lit(1).alias("kind"), cms_probe_key(value, i, width).alias("raw"))
+            for i in range(depth)
+        ]
+    maps = list(arrays)
+    on = {op: (gates or {}).get(op) for op in maps}
+    if all(g is None for g in on.values()):
+        entries = F.array(*[e for op in maps for e in arrays[op]])
+    else:
+        on = {op: F.lit(True) if g is None else g for op, g in on.items()}
+        entries = None
+        if len(maps) == 2:
+            entries = F.when(
+                on["bloom"] & on["cms"], F.array(*arrays["bloom"], *arrays["cms"])
+            )
+        for op in maps:
+            arr = F.array(*arrays[op])
+            entries = F.when(on[op], arr) if entries is None else entries.when(on[op], arr)
+    is_bloom = F.col("kind") == 0
+    cells = (
+        df.select(*gcols, F.inline(entries))
+        .select(
+            *gcols,
+            "kind",
+            F.when(is_bloom, (F.col("raw") / 64).cast("long"))
+            .otherwise(F.col("raw"))
+            .alias("key"),
+            F.when(is_bloom, _bit_mask(F.col("raw") % 64)).alias("mask"),
+        )
+        .groupBy(*gcols, "kind", "key")
+        .agg(F.bit_or("mask").alias("_bits"), F.count(F.lit(1)).alias("_n"))
+    )
+    kv = F.struct("key", F.when(is_bloom, F.col("_bits")).otherwise(F.col("_n")))
+    kinds = {"bloom": 0, "cms": 1}
+    return cells.groupBy(*gcols).agg(
+        *[
+            F.map_from_entries(
+                F.collect_list(F.when(F.col("kind") == kinds[op], kv))
+            ).alias(op)
+            for op in maps
+        ]
+    )
 
 
 def kll_fold(ks: Column) -> Column:

@@ -3,13 +3,10 @@
 Two operator families persist small internal relations while one query
 plan consumes them from several aliased branches (where AQE exchange
 reuse cannot fire): the dedup guards (``functions.dedup._GUARD_PERSISTED``)
-and the two-phase ranker (``operators.shuffle_tools._RANK_PERSISTED``);
-engine code whose one relation feeds several actions (``SummaryDB.flush``
-writes the summary and the sketch store from one window relation)
-persists it with :func:`persist_scoped`.  Those persists are
-load-bearing WITHIN one query but must not outlive it: a long-lived
-session issuing many dedup/rank queries would otherwise accumulate one
-CacheManager entry + its block-manager blocks per query
+and the two-phase ranker (``operators.shuffle_tools._RANK_PERSISTED``).
+Those persists are load-bearing WITHIN one query but must not outlive
+it: a long-lived session issuing many dedup/rank queries would otherwise
+accumulate one CacheManager entry + its block-manager blocks per query
 (measured round 10: late-suite queries absorbed the lookup/GC cost of
 hundreds of stale entries).
 
@@ -37,22 +34,11 @@ from __future__ import annotations
 from contextlib import contextmanager
 
 
-_SCOPED_PERSISTED: list = []
-
-
-def persist_scoped(df):
-    """Persist ``df`` until the enclosing :func:`transient_cache_scope`
-    exits; returns the persisted frame."""
-    df = df.persist()
-    _SCOPED_PERSISTED.append(df)
-    return df
-
-
 def _registries() -> list:
     from summarydb_spark.functions.dedup import _GUARD_PERSISTED
     from summarydb_spark.operators.shuffle_tools import _RANK_PERSISTED
 
-    return [_GUARD_PERSISTED, _RANK_PERSISTED, _SCOPED_PERSISTED]
+    return [_GUARD_PERSISTED, _RANK_PERSISTED]
 
 
 @contextmanager

@@ -28,9 +28,8 @@ from typing import Mapping, Optional, Union
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from summarydb_spark.operators.summary import SUMMARY_COLS, _bucket_udf_general
+from summarydb_spark.operators.summary import SUMMARY_COLS, bucket_by_config
 from summarydb_spark.session import local_frame
-from summarydb_spark.windowing import ExpWindowing
 
 _UNIT_COLS = [
     "stream_id",
@@ -55,38 +54,20 @@ CountsLike = Union[DataFrame, Mapping[int, int], None]
 WindowingLike = Union[object, Mapping[int, object]]
 
 
-def _bucket_one(
-    units: DataFrame, windowing, buffer_size: int, idx_col: str
-) -> DataFrame:
-    """Attach the canonical bucket for ONE policy (exp2 closed form when
-    possible, else the general bucket UDF)."""
-    exp2 = (
-        isinstance(windowing, ExpWindowing)
-        and windowing.base == 2.0
-        and buffer_size <= 0
-    )
-    if exp2:
-        from summarydb_spark.operators.summary import with_exp2_bucket
-
-        return with_exp2_bucket(units, idx_col, "_n", "bucket")
-    udf = _bucket_udf_general(windowing, buffer_size)
-    return units.withColumn("bucket", udf(F.col(idx_col), F.col("_n")))
-
-
 def _bucket_units(
     units: DataFrame, windowing: WindowingLike, buffer_size: int, idx_col: str
 ) -> DataFrame:
-    """Attach the canonical bucket, routing PER-STREAM policies.
-
-    A mapping groups its streams by identical policy config and buckets
-    each group with its own expression, unioning the branches — one plan,
-    #distinct-policies branches, each a partition-pruned filter over the
-    same units relation (mirrors SummaryDB.flush's by-config grouping).
-    Streams not covered by the mapping are the CALLER's error to catch
-    (the isin filters would silently drop them — StreamingSummarizer
-    raises loudly instead)."""
+    """Attach the canonical bucket at each stream's new size ``_n``,
+    routing PER-STREAM policies: a mapping groups its streams by
+    identical policy config, and ``summary.bucket_by_config`` buckets the
+    groups in one plan (the exp2 closed form where possible, else the
+    general bucket UDF — the sizes live in a DataFrame, not on the
+    driver).  Streams not covered by the mapping are the CALLER's error
+    to catch (StreamingSummarizer raises loudly)."""
     if not isinstance(windowing, Mapping):
-        return _bucket_one(units, windowing, buffer_size, idx_col)
+        return bucket_by_config(
+            units, [(windowing, buffer_size, None, None)], idx_col=idx_col, n_col="_n"
+        )
     if not windowing:
         raise ValueError("empty per-stream windowing map")
     by_cfg: dict = {}
@@ -94,16 +75,12 @@ def _bucket_units(
         p = w.params() if hasattr(w, "params") else vars(w)
         key = (type(w).__name__, repr(sorted(p.items())))
         by_cfg.setdefault(key, (w, []))[1].append(int(sid))
-    parts = [
-        _bucket_one(
-            units.where(F.col("stream_id").isin(sids)), w, buffer_size, idx_col
-        )
-        for w, sids in by_cfg.values()
-    ]
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    return bucket_by_config(
+        units,
+        [(w, buffer_size, sids, None) for w, sids in by_cfg.values()],
+        idx_col=idx_col,
+        n_col="_n",
+    )
 
 
 def _counts_df(ref: DataFrame, counts: CountsLike) -> Optional[DataFrame]:

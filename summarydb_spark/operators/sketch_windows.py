@@ -127,82 +127,20 @@ def summarize_windows(ev_bucketed: DataFrame, sketch_streams=None) -> DataFrame:
         "window_id", F.col("count_start")
     )
     if maps:
-        out = out.join(_bloom_cms_maps(ev_bucketed, maps, gate), key, "left")
+        out = out.join(
+            sketch.sketch_maps(
+                ev_bucketed,
+                key,
+                "value",
+                bloom=(BLOOM_M, BLOOM_K) if "bloom" in maps else None,
+                cms=(CMS_DEPTH, CMS_WIDTH) if "cms" in maps else None,
+                gates={op: gate(op) for op in maps},
+            ),
+            key,
+            "left",
+        )
     sketch_cols = [gated(op, F.col(op)).alias(op) for op in SKETCH_COLS if op in wanted]
     return out.select(*SUMMARY_COLS, *sketch_cols, "bucket")
-
-
-def _bloom_cms_maps(ev_bucketed: DataFrame, maps, gate) -> DataFrame:
-    """Per-window ``bloom`` (word -> bits) and ``cms`` (depth*width+col ->
-    count) maps from one shared explode.  Each row becomes one entry per
-    bloom position (kind 0) and per count-min row (kind 1: its cell);
-    entries aggregate per (window, kind, key) — bit_or of the position's
-    bit for bloom words, a count for cms cells — and then per window into
-    maps.  Map layout and hashes are those of ``functions.sketch``
-    (bloom_aggregate, cms_aggregate, cms_probe_key), which the query paths
-    probe.  Plain array/struct expressions only: a lambda (transform,
-    filter) is evaluated outside whole-stage codegen, row by row."""
-    value = F.col("value")
-    arrays = {}
-    if "bloom" in maps:
-        arrays["bloom"] = [
-            F.struct(F.lit(0).alias("kind"), p.alias("raw"))
-            for p in sketch.bloom_position_cols(value, BLOOM_M, BLOOM_K)
-        ]
-    if "cms" in maps:
-        arrays["cms"] = [
-            F.struct(
-                F.lit(1).alias("kind"),
-                sketch.cms_probe_key(value, i, CMS_WIDTH).alias("raw"),
-            )
-            for i in range(CMS_DEPTH)
-        ]
-    # a stream explodes only the entries of the ops it declares (a NULL
-    # array explodes to nothing).  The gate sits inside the generator,
-    # not in a row filter: a filter on stream_id would be pushed below
-    # the index window into the scan, and the branch could then no longer
-    # share the events exchange with the window aggregation.
-    gates = {op: gate(op) for op in maps}
-    if all(g is None for g in gates.values()):
-        entries = F.array(*[e for op in maps for e in arrays[op]])
-    else:
-        on = {op: F.lit(True) if g is None else g for op, g in gates.items()}
-        entries = None
-        if len(maps) == 2:
-            entries = F.when(
-                on["bloom"] & on["cms"],
-                F.array(*arrays["bloom"], *arrays["cms"]),
-            )
-        for op in maps:
-            arr = F.array(*arrays[op])
-            entries = (
-                F.when(on[op], arr) if entries is None else entries.when(on[op], arr)
-            )
-    kinds = {"bloom": 0, "cms": 1}
-    cells = ev_bucketed.select("stream_id", "bucket", F.inline(entries))
-    bloom = F.col("kind") == 0
-    cells = (
-        cells.select(
-            "stream_id",
-            "bucket",
-            "kind",
-            F.when(bloom, (F.col("raw") / 64).cast("long"))
-            .otherwise(F.col("raw"))
-            .alias("key"),
-            F.when(bloom, sketch.bit_mask(F.col("raw") % 64)).alias("mask"),
-        )
-        .groupBy("stream_id", "bucket", "kind", "key")
-        .agg(F.bit_or("mask").alias("_bits"), F.count(F.lit(1)).alias("_n"))
-    )
-    kv = F.struct("key", F.when(bloom, F.col("_bits")).otherwise(F.col("_n")))
-    return cells.groupBy("stream_id", "bucket").agg(
-        *[
-            F.map_from_entries(
-                F.collect_list(F.when(F.col("kind") == kinds[op], kv))
-            ).alias(op)
-            for op in maps
-        ]
-    )
 
 
 _RANGE_KEY = ["stream_id", "qid", "t0", "t1"]

@@ -31,6 +31,7 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
+from functools import reduce
 from typing import Optional
 
 import numpy as np
@@ -319,9 +320,7 @@ def _bucket_udf_general(windowing, buffer_size: int):
     from the ``n`` column, memoized per distinct n per python worker — no
     driver-collected per-stream dict, no O(#streams) closure state.  Streams
     sharing a count share one boundary array; the windowing policy itself is
-    a few bytes in the serialized closure.  Rows with a NULL ``n`` (rows of
-    another windowing config in a multi-config pass) bin to -1 without a
-    boundary replay."""
+    a few bytes in the serialized closure."""
     memo: dict = {}
 
     def bounds_for(nn: int) -> np.ndarray:
@@ -336,12 +335,11 @@ def _bucket_udf_general(windowing, buffer_size: int):
 
     @pandas_udf("long")
     def bucket_of(idx: pd.Series, n: pd.Series) -> pd.Series:
-        out = np.full(len(idx), -1, dtype=np.int64)
+        out = np.empty(len(idx), dtype=np.int64)
         iv = idx.to_numpy()
-        valid = n.notna().to_numpy()
         nv = n.to_numpy()
-        for nn in pd.unique(nv[valid]):
-            mask = valid & (nv == nn)
+        for nn in pd.unique(nv):
+            mask = nv == nn
             # bucket in oldest->newest numbering
             out[mask] = np.searchsorted(bounds_for(int(nn)), iv[mask], side="right") - 1
         return pd.Series(out)
@@ -414,22 +412,13 @@ def bucketed_configs(
     index_mode: str = "window",
 ) -> DataFrame:
     """:func:`bucketed_events` for streams under several windowing
-    configs in ONE pass: one index window over all events, then one
-    projection whose ``bucket`` is a CASE over the configs.
+    configs in ONE pass: one index window over all events, then
+    :func:`bucket_by_config`.
 
-    ``configs``: ``(windowing, buffer_size, stream_ids, sizes)`` tuples.
-    ``stream_ids`` selects the config's streams (None = every row; only
-    for a single config).  ``sizes`` are the config's stream sizes when
-    known — the JVM boundary literals are built from them, and a stream
-    whose actual size is missing raises in the binning guard; None
-    enumerates them with one job.
-
-    Bucket assignment per config:
-    - exp(2) without buffer: the closed form (staged columns, computed
-      once for all rows);
-    - a driver-enumerable size set (``JVM_BIN_MAX_*``): literal boundary
-      arrays in JVM expressions;
-    - otherwise the executor-memoized pandas UDF.
+    ``configs``: ``(windowing, buffer_size, stream_ids, sizes)`` tuples as
+    in :func:`bucket_by_config`, except that ``sizes=None`` for a general
+    policy enumerates the sizes with one job (the UDF bins them only when
+    there are too many for the JVM literals).
     """
     ev = _with_index(
         events.select(
@@ -443,34 +432,85 @@ def bucketed_configs(
         order_cols,
         index_mode=index_mode,
     )
-    if any(_is_exp2(w, buf) for w, buf, _s, _n in configs):
-        ev = with_exp2_bucket(ev, "idx", "n", "_exp2_bucket")
-    bucket = None
+    sized = []
+    for windowing, buf, sids, ns in configs:
+        if ns is None and not _is_exp2(windowing, buf):
+            ns = _enumerate_sizes(events, stream_col)
+        sized.append((windowing, buf, sids, ns))
+    return bucket_by_config(ev, sized)
+
+
+def bucket_by_config(
+    ev: DataFrame, configs, *, idx_col: str = "idx", n_col: str = "n"
+) -> DataFrame:
+    """Attach the canonical decay ``bucket`` to rows that already carry
+    ``stream_id``, an insertion index ``idx_col`` and their stream's size
+    ``n_col``, under one or several windowing configs.
+
+    ``configs``: ``(windowing, buffer_size, stream_ids, sizes)`` tuples.
+    ``stream_ids`` selects the config's streams (None = every row; only
+    for a single config).  ``sizes`` are the config's stream sizes when
+    known on the driver — the JVM boundary literals are built from them,
+    and a row whose size is missing raises in the binning guard; None
+    leaves a general policy to the pandas UDF.
+
+    Bucket assignment per config:
+    - exp(2) without buffer: the closed form (staged columns, computed
+      once for all rows);
+    - known sizes within ``JVM_BIN_MAX_*``: literal boundary arrays in
+      JVM expressions;
+    - otherwise the executor-memoized pandas UDF.
+    The closed-form and JVM configs share one CASE projection, which
+    raises on a row of a stream under no config.  Each UDF config buckets
+    only its own rows, in a filtered branch unioned in, so no other
+    config's rows pass through a Python worker.
+    """
+    cases, branches = [], []  # cases: (member, bucket column or None = exp2)
+    udf_sids: list = []
     for windowing, buf, sids, ns in configs:
         member = None if sids is None else F.col("stream_id").isin([int(s) for s in sids])
         if _is_exp2(windowing, buf):
-            col = F.col("_exp2_bucket")
+            cases.append((member, None))
+            continue
+        ns = None if ns is None else sorted({int(x) for x in ns if x > 0})
+        if (
+            ns is not None
+            and len(ns) <= JVM_BIN_MAX_DISTINCT_N
+            and sum(ns) <= JVM_BIN_MAX_TOTAL_REPLAY
+        ):
+            cases.append(
+                (member, _jvm_boundary_bucket(windowing, buf, ns, idx_col, n_col))
+            )
         else:
-            if ns is None:
-                ns = _enumerate_sizes(events, stream_col)
-            ns = sorted({int(x) for x in ns if x > 0})
-            if len(ns) <= JVM_BIN_MAX_DISTINCT_N and sum(ns) <= JVM_BIN_MAX_TOTAL_REPLAY:
-                col = _jvm_boundary_bucket(windowing, buf, ns)
-            else:
-                # NULL n for other configs' rows: the UDF skips them
-                n = F.col("n") if member is None else F.when(member, F.col("n"))
-                col = _bucket_udf_general(windowing, buf)(F.col("idx"), n)
-        if member is None:  # a single config over every row
-            return ev.withColumn("bucket", col).drop("_exp2_bucket")
-        bucket = F.when(member, col) if bucket is None else bucket.when(member, col)
-    guard = F.raise_error(
-        F.concat(
-            F.lit("stream "),
-            F.col("stream_id").cast("string"),
-            F.lit(" has no windowing config"),
-        )
-    )
-    return ev.withColumn("bucket", bucket.otherwise(guard)).drop("_exp2_bucket")
+            udf = _bucket_udf_general(windowing, buf)
+            rows = ev if member is None else ev.where(member)
+            udf_sids += [] if sids is None else [int(s) for s in sids]
+            branches.append(rows.withColumn("bucket", udf(F.col(idx_col), F.col(n_col))))
+    if cases:
+        rows = ev
+        if branches:  # the UDF configs' rows are bucketed in their branches
+            rows = ev.where(~F.col("stream_id").isin(udf_sids))
+        if any(col is None for _m, col in cases):
+            rows = with_exp2_bucket(rows, idx_col, n_col, "_exp2_bucket")
+        bucket = None
+        for member, col in cases:
+            col = F.col("_exp2_bucket") if col is None else col
+            if member is None:  # a single config over every row
+                bucket = col
+                break
+            bucket = F.when(member, col) if bucket is None else bucket.when(member, col)
+        else:
+            bucket = bucket.otherwise(
+                F.raise_error(
+                    F.concat(
+                        F.lit("stream "),
+                        F.col("stream_id").cast("string"),
+                        F.lit(" has no windowing config"),
+                    )
+                )
+            )
+        branches.insert(0, rows.withColumn("bucket", bucket).drop("_exp2_bucket"))
+    return reduce(DataFrame.unionByName, branches)
 
 
 def summary_aggs() -> list:

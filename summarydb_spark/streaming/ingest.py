@@ -148,8 +148,8 @@ class StreamingSummarizer:
     source, or a per-stream map ``{stream_id: policy}`` — the reference
     fixes policy per stream at creation (core/db.go:61-80), so a
     mixed-policy DB streams through ONE summarizer: streams group by
-    identical policy config and each group gets its own bucket branch in
-    the same micro-batch plan (operators.incremental._bucket_units).
+    identical policy config and one bucketing step buckets every group in
+    the same micro-batch plan (operators.summary.bucket_by_config).
     With a map, a batch containing an UNMAPPED stream id raises — the
     same register-before-ingest contract as the reference."""
 
@@ -208,8 +208,8 @@ class StreamingSummarizer:
             return  # replay of the last committed batch: already folded
         if isinstance(self.windowing, Mapping):
             # ONE job for both pre-flight checks: emptiness + the loud
-            # totality check (the per-policy isin filters would silently
-            # DROP rows of unmapped streams — refuse instead; reference
+            # totality check (the bucketing would drop or fail on rows of
+            # unmapped streams — refuse up front instead; reference
             # registers streams before ingest, core/db.go:61).  The old
             # isEmpty + filter/limit pair scanned the batch twice in the
             # all-mapped common case; this aggregate scans once with

@@ -7,16 +7,19 @@ sizes from the registry.
   on the first flush and on a second flush after more appends;
 - job count: a 24-stream, two-policy, half-sketch DB flushes its pending
   appends in a bounded number of Spark jobs;
+- UDF fallback: a general policy binned by the pandas UDF next to an
+  exp2 config buckets only its own rows there;
 - guard: a registry size that disagrees with a stream's events raises in
   the JVM binning guard instead of binning silently.
 """
 
 import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.functions import pandas_udf
 
 from summarydb_spark.engine import DEFAULT_OPS, SummaryDB
-from summarydb_spark.operators.cache_scope import _SCOPED_PERSISTED
 from summarydb_spark.functions import sketch
 from summarydb_spark.operators.sketch_windows import (
     BLOOM_K,
@@ -26,12 +29,17 @@ from summarydb_spark.operators.sketch_windows import (
     KLL_K,
     build_sketch_windows,
 )
+from summarydb_spark.operators import summary
 from summarydb_spark.operators.summary import (
     SUMMARY_COLS,
     bucketed_events,
     build_summary_windows,
 )
-from summarydb_spark.windowing import ExpWindowing, PowerWindowing
+from summarydb_spark.windowing import (
+    ExpWindowing,
+    PowerWindowing,
+    canonical_boundaries,
+)
 
 T0 = 1_700_000_000_000
 
@@ -64,11 +72,22 @@ def _rows(df, cols):
     return {tuple(r[c] for c in cols) for r in df.select(*cols).collect()}
 
 
-def _check_parity(db):
+def _new_streams(db, configs):
+    for ci, (_name, win, buf) in enumerate(configs):
+        for k, ops in enumerate(OP_SETS):
+            db.new_stream(
+                ops=DEFAULT_OPS + ops,
+                windowing=win,
+                buffer_size=buf,
+                stream_id=ci * len(OP_SETS) + k,
+            )
+
+
+def _check_parity(db, configs=CONFIGS):
     ev = db.events()
     stored_sum = db.summary_windows().drop("sid")
     stored_sk = db.spark.read.parquet(db._sketches_path).drop("sid")
-    for ci, (_name, win, buf) in enumerate(CONFIGS):
+    for ci, (_name, win, buf) in enumerate(configs):
         sids = [ci * len(OP_SETS) + k for k in range(len(OP_SETS))]
         sub = ev.where(F.col("stream_id").isin(sids))
         want = build_summary_windows(
@@ -173,29 +192,62 @@ def _check_kll(stored, bucketed, wid):
 def test_one_pass_flush_equals_single_config_builders(spark, tmp_path):
     rng = np.random.default_rng(7)
     db = SummaryDB(spark, str(tmp_path / "db"))
-    for ci, (_name, win, buf) in enumerate(CONFIGS):
-        for k, ops in enumerate(OP_SETS):
-            db.new_stream(
-                ops=DEFAULT_OPS + ops,
-                windowing=win,
-                buffer_size=buf,
-                stream_id=ci * len(OP_SETS) + k,
-            )
+    _new_streams(db, CONFIGS)
     for sid in db._streams:
         # distinct sizes per stream, and windows above the KLL compaction
         # threshold in the larger streams
         _append(db, sid, rng, 150 + 37 * sid)
     db.flush()
     _check_parity(db)
-    # second flush: some streams grow, one stays clean and is carried
-    # over; this one persists its window relation for the two writes
+    # second flush: some streams grow, one stays clean and is carried over
     for sid in db._streams:
         if sid != 5:
             _append(db, sid, rng, 90 + 11 * sid)
-    db.FLUSH_PERSIST_MIN_EVENTS = 0
     db.flush()
-    assert not _SCOPED_PERSISTED  # released when the flush ends
     _check_parity(db)
+
+
+def test_udf_fallback_config_buckets_only_its_own_rows(spark, tmp_path, monkeypatch):
+    """A general policy whose sizes exceed the JVM binning limits falls
+    back to the pandas UDF; in a flush with a second (exp2) config, the
+    UDF sees only its own config's rows, and the stores still equal the
+    single-config builders."""
+    configs = CONFIGS[:2]  # exp2 on streams 0-3, Power(1,1,1,1) on 4-7
+    rng = np.random.default_rng(5)
+    db = SummaryDB(spark, str(tmp_path / "db"))
+    _new_streams(db, configs)
+    for sid in db._streams:
+        _append(db, sid, rng, 150 + 37 * sid)  # a distinct size per stream
+    power_sizes = {db.get_stream(s).meta.n for s in range(4, 8)}
+    seen: set = set()
+
+    def spy_udf(windowing, buffer_size):
+        bounds = {
+            n: np.asarray(canonical_boundaries(windowing, n, buffer_size))
+            for n in power_sizes
+        }
+
+        @pandas_udf("long")
+        def bucket_of(idx: pd.Series, n: pd.Series) -> pd.Series:
+            stray = set(n.tolist()) - power_sizes
+            if stray:
+                raise ValueError(f"UDF saw rows of sizes {sorted(stray)}")
+            return pd.Series(
+                [
+                    int(np.searchsorted(bounds[int(nn)], i, side="right") - 1)
+                    for i, nn in zip(idx, n)
+                ]
+            )
+
+        seen.add(type(windowing).__name__)
+        return bucket_of
+
+    monkeypatch.setattr(summary, "JVM_BIN_MAX_DISTINCT_N", 0)
+    monkeypatch.setattr(summary, "_bucket_udf_general", spy_udf)
+    db.flush()
+    assert seen == {"PowerWindowing"}
+    monkeypatch.undo()
+    _check_parity(db, configs)
 
 
 def test_flush_job_count_bounded(spark, tmp_path):
