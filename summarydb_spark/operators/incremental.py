@@ -65,22 +65,17 @@ def _bucket_units(
     driver).  Streams not covered by the mapping are the CALLER's error
     to catch (StreamingSummarizer raises loudly)."""
     if not isinstance(windowing, Mapping):
-        return bucket_by_config(
-            units, [(windowing, buffer_size, None, None)], idx_col=idx_col, n_col="_n"
-        )
-    if not windowing:
+        configs = [(windowing, buffer_size, None, None)]
+    elif not windowing:
         raise ValueError("empty per-stream windowing map")
-    by_cfg: dict = {}
-    for sid, w in windowing.items():
-        p = w.params() if hasattr(w, "params") else vars(w)
-        key = (type(w).__name__, repr(sorted(p.items())))
-        by_cfg.setdefault(key, (w, []))[1].append(int(sid))
-    return bucket_by_config(
-        units,
-        [(w, buffer_size, sids, None) for w, sids in by_cfg.values()],
-        idx_col=idx_col,
-        n_col="_n",
-    )
+    else:
+        by_cfg: dict = {}
+        for sid, w in windowing.items():
+            p = w.params() if hasattr(w, "params") else vars(w)
+            key = (type(w).__name__, repr(sorted(p.items())))
+            by_cfg.setdefault(key, (w, []))[1].append(int(sid))
+        configs = [(w, buffer_size, sids, None) for w, sids in by_cfg.values()]
+    return bucket_by_config(units, configs, idx_col=idx_col, n_col="_n")
 
 
 def _counts_df(ref: DataFrame, counts: CountsLike) -> Optional[DataFrame]:
