@@ -114,13 +114,9 @@ def main() -> None:
     def release_transient_caches():
         import gc
 
-        from summarydb_spark.functions.dedup import release_guard_caches
-        from summarydb_spark.operators.shuffle_tools import (
-            release_rank_caches,
-        )
+        from summarydb_spark.operators import cache_scope
 
-        release_guard_caches()
-        release_rank_caches()
+        cache_scope.release_transient_caches()
         _release_tick["n"] += 1
         if _release_tick["n"] % 16 == 0:
             gc.collect()
@@ -143,7 +139,7 @@ def main() -> None:
     reps = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3"))
 
     def measure(name):
-        # transient_cache_scope releases guard/rank persists created by
+        # transient_cache_scope releases guard/running-sum persists made by
         # this query's reps on exit (the library-level lifecycle API,
         # round 11); the explicit release below remains as a no-op
         # safety net and keeps the gc cadence

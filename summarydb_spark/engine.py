@@ -45,7 +45,11 @@ from summarydb_spark.operators.sketch_windows import (
     query_quantile,
     summarize_windows,
 )
-from summarydb_spark.operators.summary import SUMMARY_COLS, bucketed_configs
+from summarydb_spark.operators.summary import (
+    SUMMARY_COLS,
+    SUMMARY_SCHEMA,
+    bucketed_configs,
+)
 from summarydb_spark.session import local_frame
 from summarydb_spark.windowing import windowing_from_params
 
@@ -569,7 +573,7 @@ class Stream:
         if os.path.isdir(self._db._summary_path):
             fetch = (
                 self._db._pruned_store_scan(
-                    self._db._summary_path, [self.meta.stream_id]
+                    self._db._summary_path, [self.meta.stream_id], SUMMARY_SCHEMA
                 )
                 .where(
                     (F.col("stream_id") == self.meta.stream_id)
@@ -779,7 +783,7 @@ class SummaryDB:
             "stream_id long, qid long, t0 long, t1 long",
         )
         summary = (
-            self._pruned_store_scan(self._summary_path, sids)
+            self._pruned_store_scan(self._summary_path, sids, SUMMARY_SCHEMA)
             if os.path.isdir(self._summary_path)
             else local_frame(
                 spark, [], "stream_id long, time_start long, time_end long, "
@@ -884,7 +888,7 @@ class SummaryDB:
             # project the canonical columns only: the store's physical
             # partition column (sid) must not leak into the view, where it
             # would shadow same-named SQL identifiers
-            spark.read.parquet(self._summary_path).select(
+            spark.read.schema(SUMMARY_SCHEMA).parquet(self._summary_path).select(
                 "stream_id", "time_start", "time_end",
                 "count", "sum", "max", "min",
             ).createOrReplaceTempView("sdb_summary")
@@ -1129,7 +1133,9 @@ class SummaryDB:
         v = self._stores.get("sketches")
         return os.path.join(self.path, v) if v else os.path.join(self.path, "sketches")
 
-    def _pruned_store_scan(self, path: str, sids: Sequence[int]) -> DataFrame:
+    def _pruned_store_scan(
+        self, path: str, sids: Sequence[int], schema: Optional[T.StructType] = None
+    ) -> DataFrame:
         """Scan a versioned store pruned to the queried stream set.
 
         The stores are written ``partitionBy(sid)`` (one directory per
@@ -1139,8 +1145,12 @@ class SummaryDB:
         list and open every file's footer).  At 1M streams a 3-stream
         batch reads 3 directories, not the whole store.  Falls back to
         the full scan for huge stream sets (``_PRUNE_MAX_STREAMS``),
-        where the in-list would bloat the plan for no pruning benefit."""
-        df = self.spark.read.parquet(path)
+        where the in-list would bloat the plan for no pruning benefit.
+        ``schema`` (the summary store's fixed ``SUMMARY_SCHEMA``) skips
+        the schema-inference job; the sketch store's columns vary per
+        flush, so it is read without one."""
+        reader = self.spark.read if schema is None else self.spark.read.schema(schema)
+        df = reader.parquet(path)
         if 0 < len(sids) <= _PRUNE_MAX_STREAMS and "sid" in df.columns:
             df = df.where(F.col("sid").isin([int(s) for s in sids]))
         return df
@@ -1518,7 +1528,7 @@ class SummaryDB:
         )
 
     def summary_windows(self) -> DataFrame:
-        return self.spark.read.parquet(self._summary_path)
+        return self.spark.read.schema(SUMMARY_SCHEMA).parquet(self._summary_path)
 
     def flush(self, stream_ids: Optional[Sequence[int]] = None) -> None:
         """Rebuild the canonical summary and sketch windows of the dirty
@@ -1614,8 +1624,11 @@ class SummaryDB:
         dirty-stream rows; returns the new version name (NOT yet committed)."""
         total = new_rows
         if current:
+            reader = self.spark.read
+            if kind == "summary":  # the sketch columns vary per flush
+                reader = reader.schema(SUMMARY_SCHEMA)
             carry = (
-                self.spark.read.parquet(os.path.join(self.path, current))
+                reader.parquet(os.path.join(self.path, current))
                 .drop("sid")
                 .where(~F.col("stream_id").isin(dirty_sids))
             )

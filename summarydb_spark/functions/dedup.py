@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 from summarydb_spark.functions.text import normalize_text
+from summarydb_spark.operators import cache_scope
 
 # 31-bit Mersenne prime: products a*x stay below 2^62, so the universal
 # hash works in int64 without tripping ANSI overflow checks.
@@ -83,35 +84,14 @@ def _content_digest(*cols: Column) -> Column:
     return F.md5(F.to_json(F.struct(*cols)))
 
 
-#: Guard-internal persisted relations (narrow member/bucket maps).  A
-#: long-lived session that runs the guard over many DISTINCT corpora
-#: accumulates one cached plan per distinct input (CacheManager dedupes
-#: only identical plans); `release_guard_caches()` unpersists them all —
-#: call it between corpora in a dedup service loop.  Within one corpus
-#: the cache is load-bearing (the expansion reads members from up to
-#: four plan branches), so nothing is unpersisted eagerly.
-_GUARD_PERSISTED: list = []
-
-
-def _guard_persist(df: DataFrame) -> DataFrame:
-    df = df.persist()
-    _GUARD_PERSISTED.append(df)
-    return df
-
-
-def release_guard_caches() -> int:
-    """Unpersist every guard-internal cached relation created so far and
-    return how many were released.  Safe to call at any time (Spark's
-    unpersist is idempotent); subsequent guard calls re-cache."""
-    n = 0
-    while _GUARD_PERSISTED:
-        df = _GUARD_PERSISTED.pop()
-        try:
-            df.unpersist()
-            n += 1
-        except Exception:
-            pass
-    return n
+# Guard-internal relations (narrow member/bucket maps) persist through
+# ``operators.cache_scope.persist``: a long-lived session that runs the
+# guard over many DISTINCT corpora accumulates one cached plan per
+# distinct input (CacheManager dedupes only identical plans), so scope
+# each corpus with ``transient_cache_scope()`` or call
+# ``release_transient_caches()`` between corpora.  Within one corpus the
+# cache is load-bearing (the expansion reads members from up to four
+# plan branches), so nothing is unpersisted eagerly.
 
 
 def _collapse_members(
@@ -163,7 +143,7 @@ def _collapse_members(
         "_rid", id_col, *fcols
     )
     if persist:
-        members = _guard_persist(members)
+        members = cache_scope.persist(members)
     return members, rid_map
 
 
@@ -346,7 +326,7 @@ def minhash_lsh_pairs(
         # fold itself is column-pruned out of the reattach, but the
         # string shingling above it is not) — persisted-store callers
         # skip this, their sigs are a plain parquet scan
-        sigs = _guard_persist(sigs)
+        sigs = cache_scope.persist(sigs)
     # Hot-bucket guard: collapse identical shingle SETS to one
     # representative per band bucket.  An exact-dup cluster of E
     # documents would otherwise put E ids into one bucket in every band
@@ -495,7 +475,7 @@ def minhash_lsh_join(
     # was dominated by re-running the batch shingle+fold per branch);
     # the corpus side stays unpersisted — it is a parquet scan of the
     # persisted signature store, cheap to re-read
-    batch_sigs = _guard_persist(batch_sigs)
+    batch_sigs = cache_scope.persist(batch_sigs)
     # Hot-bucket guard (both sides): collapse identical shingle sets to
     # representatives per band bucket — a corpus-side exact-dup cluster
     # of E docs matched by one arriving batch doc would otherwise produce
@@ -673,10 +653,10 @@ def banded_jaccard_pairs(
     # explode+count+expand+collect_list chain, measured at sf0.1 as three
     # separate ~8-12 s recomputations (the reattach legs alias _id to
     # id_a/id_b, so ReuseExchange never unifies them).  One persist makes
-    # it single-run; released with release_guard_caches() like the other
+    # it single-run; released with release_transient_caches() like the other
     # guard caches (guide §3.3: materialize a multiply-consumed
     # intermediate instead of letting the optimizer duplicate it).
-    sigs = _guard_persist(sigs)
+    sigs = cache_scope.persist(sigs)
     # Hot-bucket guard: collapse identical (block, shingle-set) contents
     # to representatives inside each band bucket.  An exact-dup cluster
     # of E docs would otherwise collect an E-length id array into a
@@ -735,7 +715,7 @@ def banded_jaccard_pairs(
     # without it each plan branch re-folds (measured 12 ArrowEvalPython
     # nodes, 9.8 s vs 1.8 s at sf0.1).  CacheManager dedupes by analyzed
     # plan, so repeated calls share one bounded entry.
-    all_buckets = _guard_persist(
+    all_buckets = cache_scope.persist(
         banded.groupBy(*key)
         .agg(ids_sorted.alias("ids"))
         .where(F.size("ids") > 1)
@@ -1014,14 +994,14 @@ def embedding_near_dups(
     # persisted (narrow): rid_map feeds the probe side + intra payload,
     # members feeds four expansion branches — without the shared
     # materialization each branch re-runs the vector digest
-    rid_map = _guard_persist(
+    rid_map = cache_scope.persist(
         nrw.groupBy("_ck").agg(
             F.min("_id").alias("_rid"),
             F.min("sig").alias("sig"),
             F.min("_selfcos").alias("_selfcos"),
         )
     )
-    members = _guard_persist(
+    members = cache_scope.persist(
         nrw.select("_id", "_ck")
         .join(rid_map.select("_ck", "_rid"), "_ck")
         .select("_rid", "_id")

@@ -1,22 +1,23 @@
-"""Lifecycle scoping for the engine's TRANSIENT internal caches.
+"""Lifecycle of the engine's TRANSIENT internal caches.
 
 Two operator families persist small internal relations while one query
 plan consumes them from several aliased branches (where AQE exchange
-reuse cannot fire): the dedup guards (``functions.dedup._GUARD_PERSISTED``)
-and the two-phase ranker (``operators.shuffle_tools._RANK_PERSISTED``).
-Those persists are load-bearing WITHIN one query but must not outlive
-it: a long-lived session issuing many dedup/rank queries would otherwise
-accumulate one CacheManager entry + its block-manager blocks per query
-(measured round 10: late-suite queries absorbed the lookup/GC cost of
-hundreds of stale entries).
+reuse cannot fire): the dedup guards (``functions.dedup``) and the
+two-pass running sum (``operators.shuffle_tools.running_sum``).  Both
+persist through :func:`persist`, which records the relation in one
+registry.  Those persists are load-bearing WITHIN one query but must not
+outlive it: a long-lived session issuing many dedup/rank queries would
+otherwise accumulate one CacheManager entry + its block-manager blocks
+per query (measured round 10: late-suite queries absorbed the lookup/GC
+cost of hundreds of stale entries).
 
 :func:`transient_cache_scope` is the library-level answer: wrap each
-logical unit of work (one query build + its actions) and every guard/rank
-relation persisted INSIDE the block is unpersisted on exit.  Scopes nest
-— an inner scope releases only what it added.  ``bench.py``'s explicit
-``release_guard_caches()/release_rank_caches()`` calls remain as a
-safety net (unpersist is idempotent), and remain the right tool for
-code that cannot use a ``with`` block.
+logical unit of work (one query build + its actions) and every relation
+persisted INSIDE the block is unpersisted on exit.  Scopes nest — an
+inner scope releases only what it added.  :func:`release_transient_caches`
+drops every registered relation at once; it is the tool for code that
+cannot use a ``with`` block (``bench.py`` calls it between queries as a
+safety net; unpersist is idempotent).
 
 Why release-on-exit instead of auto-release when the consuming action
 completes: the persists are created deep inside query builders that
@@ -31,34 +32,57 @@ call site.
 
 from __future__ import annotations
 
+import threading
 from contextlib import contextmanager
 
+from pyspark.sql import DataFrame
 
-def _registries() -> list:
-    from summarydb_spark.functions.dedup import _GUARD_PERSISTED
-    from summarydb_spark.operators.shuffle_tools import _RANK_PERSISTED
+#: every relation persisted through :func:`persist` and not yet released;
+#: append-only between releases, so a scope owns everything past its mark
+_PERSISTED: list = []
+_LOCK = threading.Lock()
 
-    return [_GUARD_PERSISTED, _RANK_PERSISTED]
+
+def persist(df: DataFrame) -> DataFrame:
+    """Persist ``df`` (lazily, at Spark's default level) and register it
+    for release by the enclosing :func:`transient_cache_scope` or by
+    :func:`release_transient_caches`."""
+    df = df.persist()
+    with _LOCK:
+        _PERSISTED.append(df)
+    return df
+
+
+def _release_past(mark: int) -> int:
+    with _LOCK:
+        drop = _PERSISTED[mark:]
+        del _PERSISTED[mark:]
+    n = 0
+    for df in reversed(drop):
+        try:
+            df.unpersist()
+            n += 1
+        except Exception:
+            pass
+    return n
+
+
+def release_transient_caches() -> int:
+    """Unpersist every registered relation and return how many were
+    released.  Safe any time (unpersist is idempotent); later guard or
+    running-sum calls re-cache."""
+    return _release_past(0)
 
 
 @contextmanager
 def transient_cache_scope():
-    """Release every guard/rank relation persisted inside the block on
-    exit (including on exception).  Entries present before entry are
+    """Release every relation persisted inside the block on exit
+    (including on exception).  Entries present before entry are
     untouched, so scopes nest and concurrent scopes on different threads
     only over-release benignly (unpersist is idempotent and a released
     relation is re-cached by the next guard call)."""
-    regs = _registries()
-    marks = [len(r) for r in regs]
+    mark = len(_PERSISTED)
     try:
         yield
     finally:
-        for reg, mark in zip(regs, marks):
-            # pop only what the block added; the list is append-only
-            # inside the block, so everything past the mark is ours
-            while len(reg) > mark:
-                df = reg.pop()
-                try:
-                    df.unpersist()
-                except Exception:
-                    pass
+        _release_past(mark)

@@ -1,7 +1,7 @@
-"""Shuffle-shape tools for the 100 TB deployment: skew-salted joins and
-bucketed (co-located) tables.
+"""Shuffle-shape tools for the 100 TB deployment: skew-salted joins,
+bucketed (co-located) tables and a two-pass running sum.
 
-These are the two levers the rest of the engine's plan shapes assume exist
+These are the levers the rest of the engine's plan shapes assume exist
 at cluster scale but that local parquet testdata never exercises:
 
 - ``salted_join``: a hash join on a key with heavy hitters (the exact
@@ -22,8 +22,13 @@ at cluster scale but that local parquet testdata never exercises:
   100 TB fact joined daily).  ``tests/test_shuffle_tools.py`` pins the
   no-Exchange plan.
 
-Both preserve exact result semantics (verified row-for-row against the
-unsalted/unbucketed plans in tests).
+- ``running_sum``: the exclusive running sum / global rank that
+  ``row_number()`` or ``sum() OVER (ORDER BY ...)`` would compute on one
+  task, as a range shuffle plus a broadcast offset fixup (the register's
+  rank and prefix-sum queries use it).
+
+All preserve exact result semantics (verified row-for-row against the
+unsalted/unbucketed/window plans in tests).
 """
 
 from __future__ import annotations
@@ -114,180 +119,102 @@ def bucketed_join(
     return spark.table(left_table).join(spark.table(right_table), key, how)
 
 
-#: rank-internal persisted relations (see global_rank docstring); released
-#: by release_rank_caches(), never eagerly (the counts and join passes both
-#: read them lazily at action time)
-_RANK_PERSISTED: list = []
-
-
-def release_rank_caches() -> int:
-    """Unpersist every global_rank-internal cached relation created so far
-    and return how many were released.  Safe any time (unpersist is
-    idempotent); later global_rank calls re-cache."""
-    n = 0
-    while _RANK_PERSISTED:
-        df = _RANK_PERSISTED.pop()
-        try:
-            df.unpersist()
-            n += 1
-        except Exception:
-            pass
-    return n
-
-
-def global_rank(
-    df: DataFrame, order_cols: Sequence[str], out_col: str = "rnk"
+def running_sum(
+    df: DataFrame,
+    order_cols: Sequence,
+    val_col: Optional[str] = None,
+    part_col: Optional[str] = None,
+    out_col: str = "running_sum",
 ) -> DataFrame:
-    """Exact global 1-based rank of every row under the TOTAL order
-    ``order_cols`` — withOUT the single-partition WindowExec that
-    ``row_number() OVER (ORDER BY ...)`` plans to (which moves the whole
-    relation to one task: the classic 100 TB deadend).  The caller must
-    ensure ``order_cols`` is a total order (include a unique tiebreak
-    column); ties would make ranks partition-layout-dependent.
+    """EXCLUSIVE running sum of ``val_col`` (1 per row when None) within
+    each ``part_col`` group (the whole relation when None) under
+    ``order_cols`` — the two-pass twin of ``sum(v) OVER (PARTITION BY key
+    ORDER BY ... ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)``,
+    emitted NULL-free (0 for a group's first row).  With ``val_col=None``
+    it is the 0-based global index, so ``out_col + 1`` is the exact rank
+    of ``row_number() OVER (ORDER BY ...)``; the caller must make
+    ``order_cols`` a total order (include a unique tiebreak column), or
+    ties make the result partition-layout-dependent.  ``order_cols``
+    entries may be column names or Column sort expressions (e.g.
+    ``F.col("score").desc()``).
 
-    Three bounded steps (the engine's own two-phase index,
-    operators/summary.py:143-198, without the stream key):
+    A window with an empty (or low-cardinality) partition spec moves the
+    whole relation — or a dominant group — to one task: the classic
+    100 TB deadend.  Three bounded steps instead:
 
-    1. ``repartitionByRange(order_cols)`` + sort WITHIN partitions —
-       Spark's sampled range partitioner splits the relation into
-       globally ordered partitions, each sorted locally in parallel;
-    2. partition-local 0-based index via mapInPandas (no shuffle, a
-       counter across Arrow batches);
-    3. per-partition row counts (one row per partition) -> cumulative
-       offsets over that tiny relation -> broadcast join fixes the
-       local indexes up to global ranks.
+    1. ``repartitionByRange(part_col, *order_cols)`` + sort WITHIN
+       partitions — Spark's sampled range partitioner splits even one
+       group across many globally ordered partitions, each sorted
+       locally in parallel;
+    2. partition-local running sums per group via mapInPandas (no
+       shuffle; per-group carries across Arrow batches);
+    3. per-(partition, group) totals (a relation bounded by the
+       partition count times the groups) -> cumulative offsets by a
+       window over that tiny relation -> broadcast join fixes the local
+       sums up.
 
-    The offsets window IS an unpartitioned window — over a relation
-    bounded by the shuffle-partition count, never by the data.
+    The locally summed relation is PERSISTED through
+    ``operators.cache_scope.persist`` before the totals pass: the totals
+    leg and the fixup leg are otherwise two independent materializations
+    of the same range shuffle, and nothing guarantees they agree on
+    partitioning — the range partitioner's sample seed derives from the
+    physical RDD lineage and AQE may coalesce the two shuffles
+    differently, which desynchronizes ``_pid`` between the passes
+    (observed as a silently empty join leg).  The cache pins ONE set of
+    partitions for both legs; ``transient_cache_scope()`` or
+    ``release_transient_caches()`` drops it.
 
-    The locally-indexed relation is PERSISTED (memory-and-disk) before
-    the counts pass: the counts pass and the join pass are otherwise two
-    independent materializations of the same range shuffle, and nothing
-    guarantees they agree on partitioning — the range partitioner's
-    sample seed derives from the physical RDD lineage and AQE may
-    coalesce the two shuffles differently, which desynchronizes ``_pid``
-    between the passes (observed as a silently empty join leg).  The
-    cache pins ONE set of partitions for both passes; call
-    :func:`release_rank_caches` to drop the pinned relations (same
-    contract as functions.dedup.release_guard_caches).
-
-    ``order_cols`` entries may be column names or Column sort expressions
-    (e.g. ``F.col("score").desc()``) — descending ranks need the latter."""
-    order = [F.col(c) if isinstance(c, str) else c for c in order_cols]
-    d = df.repartitionByRange(*order).sortWithinPartitions(*order)
-
+    NULL values accumulate as 0, matching SQL ``sum``'s null-skipping.
+    Integer values only: the accumulator is exact int64."""
+    import pandas as pd
+    from pyspark.sql import Window
     from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
-    schema_out = StructType(
-        list(d.schema.fields)
-        + [StructField("_pid", IntegerType()), StructField("_li", LongType())]
-    )
+    from summarydb_spark.operators.cache_scope import persist
 
-    def local_index(it):
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        c = 0
-        for pdf in it:
-            n = len(pdf)
-            pdf = pdf.assign(_pid=pid, _li=range(c, c + n))
-            c += n
-            yield pdf
-
-    d = d.mapInPandas(local_index, schema_out)
-    from pyspark import StorageLevel
-
-    d = d.persist(StorageLevel.MEMORY_AND_DISK)
-    _RANK_PERSISTED.append(d)
-    counts = d.groupBy("_pid").agg(F.count(F.lit(1)).alias("_c"))
-    from pyspark.sql import Window
-
-    w_off = Window.orderBy("_pid").rowsBetween(Window.unboundedPreceding, -1)
-    fixups = counts.select(
-        F.col("_pid").alias("_fix_pid"),
-        F.coalesce(F.sum("_c").over(w_off), F.lit(0)).alias("_off"),
-    )
-    return (
-        d.join(F.broadcast(fixups), F.col("_pid") == F.col("_fix_pid"))
-        .withColumn(out_col, (F.col("_li") + F.col("_off") + 1).cast("long"))
-        .drop("_pid", "_li", "_fix_pid", "_off")
-    )
-
-
-def partitioned_prefix_sum(
-    df: DataFrame,
-    part_col: str,
-    order_cols: Sequence[str],
-    val_col: str,
-    out_col: str = "prefix_sum",
-) -> DataFrame:
-    """EXCLUSIVE running sum of ``val_col`` within each ``part_col`` group
-    under ``order_cols`` — the two-phase twin of
-    ``sum(v) OVER (PARTITION BY key ORDER BY ... ROWS UNBOUNDED PRECEDING
-    AND 1 PRECEDING)`` that does NOT put each group on a single task: a
-    window cumsum over a one-language-dominant corpus routes the dominant
-    shard's entire doc list through one task at 100 TB; here the range
-    partitioner splits every group across partitions and only the
-    per-(partition, group) TOTALS (a tiny relation) are globally combined.
-
-    Same machinery and caveats as :func:`global_rank`: range shuffle +
-    in-partition sort, mapInPandas local accumulation, broadcast offset
-    fixup, and a pinned cache (released by :func:`release_rank_caches`)
-    so both passes see one partitioning.  NULL values accumulate as 0,
-    matching SQL ``sum``'s null-skipping.  Integer inputs only (the
-    accumulator is exact int64); the emitted sum is NULL-free (0 for the
-    first row of each group, like ``coalesce(prev_cum, 0)``)."""
-    order = [F.col(part_col)] + [
+    keys = [] if part_col is None else [part_col]
+    order = [F.col(k) for k in keys] + [
         F.col(c) if isinstance(c, str) else c for c in order_cols
     ]
     d = df.repartitionByRange(*order).sortWithinPartitions(*order)
-
-    from pyspark.sql.types import IntegerType, LongType, StructField, StructType
-
     schema_out = StructType(
         list(d.schema.fields)
         + [StructField("_pid", IntegerType()), StructField("_lx", LongType())]
     )
 
     def local_sums(it):
-        import pandas as pd
         from pyspark import TaskContext
 
         pid = TaskContext.get().partitionId()
-        sums: dict = {}
+        carry: dict = {}
         for pdf in it:
-            lx = []
-            for key, v in zip(pdf[part_col], pdf[val_col]):
-                c = sums.get(key, 0)
-                lx.append(c)
-                if not pd.isna(v):
-                    sums[key] = c + int(v)
+            one = pd.Series(1, index=pdf.index, dtype="int64")
+            v = one if val_col is None else pdf[val_col].fillna(0).astype("int64")
+            k = 0 * one if part_col is None else pdf[part_col]
+            g = v.groupby(k, sort=False, dropna=False)
+            lx = g.cumsum() - v + k.map(carry).fillna(0).astype("int64")
+            for key, t in g.sum().items():
+                carry[key] = carry.get(key, 0) + int(t)
             yield pdf.assign(_pid=pid, _lx=lx)
 
-    d = d.mapInPandas(local_sums, schema_out)
-    from pyspark import StorageLevel
-
-    d = d.persist(StorageLevel.MEMORY_AND_DISK)
-    _RANK_PERSISTED.append(d)
-    totals = d.groupBy("_pid", part_col).agg(F.sum(val_col).alias("_t"))
-    from pyspark.sql import Window
-
+    d = persist(d.mapInPandas(local_sums, schema_out))
+    v = F.lit(1) if val_col is None else F.col(val_col)
+    totals = d.groupBy("_pid", *keys).agg(F.sum(v).alias("_t"))
     w_off = (
-        Window.partitionBy(part_col)
+        Window.partitionBy(*keys)
         .orderBy("_pid")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     fixups = totals.select(
         F.col("_pid").alias("_fix_pid"),
-        F.col(part_col).alias("_fix_key"),
+        *[F.col(k).alias("_fix_key") for k in keys],
         F.coalesce(F.sum("_t").over(w_off), F.lit(0)).alias("_off"),
     )
+    on = F.col("_pid") == F.col("_fix_pid")
+    for k in keys:
+        on = on & F.col(k).eqNullSafe(F.col("_fix_key"))
     return (
-        d.join(
-            F.broadcast(fixups),
-            (F.col("_pid") == F.col("_fix_pid"))
-            & (F.col(part_col) == F.col("_fix_key")),
-        )
+        d.join(F.broadcast(fixups), on)
         .withColumn(out_col, (F.col("_lx") + F.col("_off")).cast("long"))
         .drop("_pid", "_lx", "_fix_pid", "_fix_key", "_off")
     )

@@ -18,9 +18,11 @@ vectorized Arrow-batched pandas UDF (np.searchsorted, O(log W) per row).
 
 Scale notes (100 TB):
 - the per-stream insertion index uses a window function, which shuffles by
-  stream_id and parallelizes across streams; for few-very-large-stream
-  layouts use ``index_mode="range"`` which computes the index with a
-  range-repartition + per-partition offset two-pass (no single-task sort).
+  stream_id and parallelizes across streams: one stream is one task.  A
+  range-partitioned two-pass index (as in
+  ``operators.shuffle_tools.running_sum``) would split a giant stream, but
+  measured 2-3x the CPU at 24 x 400 and 2 x 100k events, so the window is
+  the only index until a workload with giant streams shows otherwise.
 - the final groupBy(stream_id, bucket) is a partial-aggregate-friendly
   hash aggregation: ~log(N) groups per stream, so the shuffle output is
   tiny regardless of input size.
@@ -38,6 +40,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
 from summarydb_spark.session import local_frame
@@ -59,6 +62,17 @@ SUMMARY_COLS = [
     "max",
     "min",
 ]
+
+#: Parquet read schema of a summary store version: ``SUMMARY_COLS`` plus
+#: the ``sid`` partition column (a copy of stream_id).  A read without it
+#: runs a one-task schema-inference job.
+SUMMARY_SCHEMA = T.StructType(
+    [
+        T.StructField(c, T.DoubleType() if c in ("sum", "max", "min") else T.LongType())
+        for c in SUMMARY_COLS
+    ]
+    + [T.StructField("sid", T.LongType())]
+)
 
 
 def clamp_monotonic(
@@ -111,95 +125,15 @@ def clamp_monotonic(
     return df.withColumn(ts_col, clamped).drop("_i")
 
 
-def _with_index(
-    df: DataFrame,
-    stream_col: str,
-    ts_col: str,
-    order_cols,
-    index_mode: str = "window",
-) -> DataFrame:
+def _with_index(df: DataFrame, stream_col: str, ts_col: str, order_cols) -> DataFrame:
     """Add per-stream insertion index ``idx`` (0-based, oldest first) and
-    stream size ``n``.
-
-    ``index_mode="window"`` (default): one row_number window per stream —
-    right for the reference's many-streams layout (parallelism = #streams).
-
-    ``index_mode="range"``: for few-giant-streams layouts, where a single
-    window partition would mean one task sorting (and possibly spilling)
-    billions of rows.  Three bounded steps instead:
-
-    1. range-repartition + sort *within* partitions on (stream, ts, ...) —
-       Spark's sampled range partitioner splits even one stream across
-       many ordered partitions;
-    2. partition-local running index per stream via mapInPandas (no
-       shuffle; a per-partition counter across Arrow batches);
-    3. per-(partition, stream) row counts (tiny aggregate) -> driver
-       computes global offsets -> broadcast map fixes the local indexes up.
-
-    Both modes produce identical (idx, n); tests assert it.
-    """
-    if index_mode == "window":
-        order = [F.col(ts_col).asc()] + [F.col(c).asc() for c in order_cols]
-        w = Window.partitionBy(stream_col).orderBy(*order)
-        wn = Window.partitionBy(stream_col)
-        return df.withColumn(
-            "idx", F.row_number().over(w).cast("long") - 1
-        ).withColumn("n", F.count(F.lit(1)).over(wn))
-    if index_mode != "range":
-        raise ValueError(f"unknown index_mode {index_mode!r}")
-
-    order = [F.col(stream_col), F.col(ts_col)] + [F.col(c) for c in order_cols]
-    d = df.repartitionByRange(*order).sortWithinPartitions(*order)
-
-    from pyspark.sql.types import IntegerType, LongType, StructField, StructType
-
-    schema_out = StructType(
-        list(d.schema.fields)
-        + [StructField("_pid", IntegerType()), StructField("_li", LongType())]
-    )
-
-    def local_index(it):
-        import pandas as pd  # noqa: F401
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        counters: dict = {}
-        for pdf in it:
-            lis = []
-            for sid in pdf[stream_col]:
-                c = counters.get(sid, 0)
-                lis.append(c)
-                counters[sid] = c + 1
-            pdf = pdf.assign(_pid=pid, _li=lis)
-            yield pdf
-
-    d = d.mapInPandas(local_index, schema_out)
-    # Global offsets from per-(partition, stream) counts — computed with
-    # window functions over the tiny counts relation and broadcast-joined
-    # back, so neither driver memory nor plan size grows with #streams
-    # (the previous create_map-literal version was O(#streams) in both).
-    counts = d.groupBy("_pid", stream_col).agg(F.count(F.lit(1)).alias("_c"))
-    w_off = (
-        Window.partitionBy(stream_col)
-        .orderBy("_pid")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    w_tot = Window.partitionBy(stream_col)
-    fixups = counts.select(
-        F.col("_pid").alias("_fix_pid"),
-        F.col(stream_col).alias("_fix_sid"),
-        F.coalesce(F.sum("_c").over(w_off), F.lit(0)).alias("_off"),
-        F.sum("_c").over(w_tot).alias("_ntot"),
-    )
-    return (
-        d.join(
-            F.broadcast(fixups),
-            (F.col(stream_col) == F.col("_fix_sid"))
-            & (F.col("_pid") == F.col("_fix_pid")),
-        )
-        .withColumn("idx", (F.col("_li") + F.col("_off")).cast("long"))
-        .withColumn("n", F.col("_ntot").cast("long"))
-        .drop("_pid", "_li", "_fix_pid", "_fix_sid", "_off", "_ntot")
+    stream size ``n``: one row_number window per stream, so parallelism
+    is the number of streams (the reference's many-streams layout)."""
+    order = [F.col(ts_col).asc()] + [F.col(c).asc() for c in order_cols]
+    w = Window.partitionBy(stream_col).orderBy(*order)
+    wn = Window.partitionBy(stream_col)
+    return df.withColumn("idx", F.row_number().over(w).cast("long") - 1).withColumn(
+        "n", F.count(F.lit(1)).over(wn)
     )
 
 
@@ -383,7 +317,6 @@ def bucketed_events(
     value_col: str = "value",
     order_cols: tuple = (),
     buffer_size: int = 0,
-    index_mode: str = "window",
 ) -> DataFrame:
     """Events annotated with per-stream insertion index ``idx``, stream
     size ``n`` and canonical decay ``bucket`` — the shared first stage of
@@ -397,7 +330,6 @@ def bucketed_events(
         ts_col=ts_col,
         value_col=value_col,
         order_cols=order_cols,
-        index_mode=index_mode,
     )
 
 
@@ -409,7 +341,6 @@ def bucketed_configs(
     ts_col: str = "ts",
     value_col: str = "value",
     order_cols: tuple = (),
-    index_mode: str = "window",
 ) -> DataFrame:
     """:func:`bucketed_events` for streams under several windowing
     configs in ONE pass: one index window over all events, then
@@ -430,7 +361,6 @@ def bucketed_configs(
         "stream_id",
         "ts",
         order_cols,
-        index_mode=index_mode,
     )
     sized = []
     for windowing, buf, sids, ns in configs:
@@ -547,7 +477,6 @@ def build_summary_windows(
     value_col: str = "value",
     order_cols: tuple = (),
     buffer_size: int = 0,
-    index_mode: str = "window",
 ) -> DataFrame:
     """Build the canonical decayed ``summary_windows`` table for a batch.
 
@@ -565,6 +494,5 @@ def build_summary_windows(
             value_col=value_col,
             order_cols=order_cols,
             buffer_size=buffer_size,
-            index_mode=index_mode,
         )
     )

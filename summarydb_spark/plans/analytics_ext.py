@@ -172,10 +172,11 @@ GROUP BY bucket"""
 def q_equidepth_histogram_df(spark, sf_dir: str):
     """Spark-side equidepth_histogram_value (oracle:
     :func:`q_equidepth_histogram_value`): ntile(10) re-derived from the
-    exact global rank (operators/shuffle_tools.global_rank, two-phase
-    partition-offset — no single-partition WindowExec over events) plus
-    the closed-form fill rule both engines share: with n rows, q = n div
-    10 and rem = n mod 10, the first rem buckets take q+1 rows, so
+    exact global rank (1 + operators/shuffle_tools.running_sum of 1 per
+    row: two-pass partition-offset — no single-partition WindowExec over
+    events) plus the closed-form fill rule both engines share: with n
+    rows, q = n div 10 and rem = n mod 10, the first rem buckets take q+1
+    rows, so
 
         bucket(r) = (r-1) div (q+1) + 1                    if r <= rem*(q+1)
                     rem + (r-1-rem*(q+1)) div q + 1        otherwise
@@ -186,12 +187,14 @@ def q_equidepth_histogram_df(spark, sf_dir: str):
     same dsum/round text as the oracle."""
     from pyspark.sql import functions as F
 
-    from summarydb_spark.operators.shuffle_tools import global_rank
+    from summarydb_spark.operators.shuffle_tools import running_sum
     from summarydb_spark.sources.tables import register_tables
 
     register_tables(spark, sf_dir)
     ev = spark.table("events").select("value", "event_id")
-    ranked = global_rank(ev, ["value", "event_id"], out_col="_rnk")
+    ranked = running_sum(ev, ["value", "event_id"], out_col="_rnk").withColumn(
+        "_rnk", F.col("_rnk") + 1
+    )
     nrel = ranked.agg(F.count(F.lit(1)).alias("_n"))
     bucketed = ranked.crossJoin(F.broadcast(nrel)).withColumn(
         "bucket",

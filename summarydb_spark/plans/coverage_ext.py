@@ -106,14 +106,14 @@ GROUP BY lang, chunk_id"""
 def q_seq_packing_df(spark, sf_dir: str):
     """Spark-side seq_packing (oracle: :func:`q_seq_packing`): the
     per-language exclusive token prefix sum comes from
-    operators/shuffle_tools.partitioned_prefix_sum — a range shuffle on
+    operators/shuffle_tools.running_sum — a range shuffle on
     (lang, doc_id) with per-(partition, lang) totals broadcast back — so
     a 95 %-one-language corpus still packs in parallel instead of
     dragging the dominant shard through a single cumsum task.  Chunk
     assignment and all aggregates reuse the oracle's expression text."""
     from pyspark.sql import functions as F
 
-    from summarydb_spark.operators.shuffle_tools import partitioned_prefix_sum
+    from summarydb_spark.operators.shuffle_tools import running_sum
     from summarydb_spark.plans.portable_sql import dsum
     from summarydb_spark.sources.tables import register_tables
 
@@ -121,8 +121,8 @@ def q_seq_packing_df(spark, sf_dir: str):
     d = spark.sql(
         "SELECT lang, doc_id, size(split(text, ' ')) AS n_tok FROM documents"
     )
-    ofs = partitioned_prefix_sum(
-        d, "lang", ["doc_id"], "n_tok", out_col="prev_cum"
+    ofs = running_sum(
+        d, ["doc_id"], val_col="n_tok", part_col="lang", out_col="prev_cum"
     )
     asn = ofs.withColumn(
         "chunk_id",

@@ -965,45 +965,6 @@ def _write_ordered_chunks(prep: DataFrame, src: str, ranges) -> None:
         prev_mtime = batch_mtime
 
 
-# per-(prefix) work dirs issued by _gate_workdir, reclaimed on the NEXT
-# call with the same prefix and at interpreter exit — the returned gate
-# DataFrame reads the state dir lazily, so the dir must outlive the
-# caller's action and cannot be deleted inside the gate itself
-_GATE_WORKDIRS: dict = {}
-
-
-def _gate_workdir(prefix: str) -> str:
-    """Per-run state+checkpoint dir for the summarizer gates, on tmpfs
-    where available: both die with the query, and the checkpoint WAL
-    fsyncs per micro-batch (streaming/state.ephemeral_checkpoint_base
-    rationale).  The PREVIOUS run's dir for the same gate is reclaimed
-    here (its lazy readers are gone by the time the gate re-runs), and
-    an atexit hook sweeps whatever the process end leaves behind —
-    tmpfs is RAM, so unlike the old /tmp mkdtemp the dirs must not
-    accumulate."""
-    import atexit
-    import shutil
-    import tempfile
-
-    from summarydb_spark.streaming.state import ephemeral_checkpoint_base
-
-    old = _GATE_WORKDIRS.pop(prefix, None)
-    if old:
-        shutil.rmtree(old, ignore_errors=True)
-    base = ephemeral_checkpoint_base()
-    os.makedirs(base, exist_ok=True)
-    work = tempfile.mkdtemp(prefix=prefix, dir=base)
-    if not _GATE_WORKDIRS:
-        atexit.register(
-            lambda: [
-                shutil.rmtree(d, ignore_errors=True)
-                for d in _GATE_WORKDIRS.values()
-            ]
-        )
-    _GATE_WORKDIRS[prefix] = work
-    return work
-
-
 def q_streaming_mixed_policy_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TWO windowing policies in ONE Structured-Streaming summarizer job:
     the first 512 events (ordered by ts, event_id) split into stream 0
@@ -1032,7 +993,7 @@ def q_streaming_mixed_policy_gate(spark: SparkSession, sf_dir: str) -> DataFrame
     src = _ordered_event_source(
         spark, sf_dir, _MIXED_N, ((0, 192), (192, _MIXED_N))
     )
-    work = _gate_workdir("mixed_policy_gate_")
+    work = tempfile.mkdtemp(prefix="mixed_policy_gate_")
     source = (
         spark.readStream.schema("stream_id long, idx long, t long, v double")
         .option("maxFilesPerTrigger", 1)
@@ -1147,11 +1108,7 @@ def q_streaming_restart_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = _ordered_event_source(
         spark, sf_dir, _RESTART_N, ((0, 128), (128, _RESTART_N))
     )
-    # same tmpfs-backed per-run dir as the mixed-policy gate; the
-    # kill+restart sequence is contained in this one call, so nothing
-    # here weakens the recovery semantics under test (the _COMMIT
-    # marker protocol is filesystem-agnostic)
-    work = _gate_workdir("restart_gate_")
+    work = tempfile.mkdtemp(prefix="restart_gate_")
 
     def mk_summ() -> StreamingSummarizer:
         return StreamingSummarizer(
@@ -4188,10 +4145,8 @@ def _run_stream_to_memory(df, name: str, spark: SparkSession,
     moot here: the query terminates and its ephemeral checkpoint is
     deleted.  Callers that NEED the no-data batch (append-mode
     watermarked aggregates, outer joins, event-time timeouts) keep the
-    default.  The checkpoint itself is an ephemeral per-run directory
-    on tmpfs where available (streaming/state.ephemeral_checkpoint):
-    every state commit and offset/commit-log write fsyncs, pure fixed
-    cost per batch on a disk-backed temp dir."""
+    default.  The checkpoint itself is a fresh per-run temp directory,
+    removed afterwards (streaming/state.ephemeral_checkpoint)."""
     from summarydb_spark.streaming.state import (
         ephemeral_checkpoint,
         scoped_conf,

@@ -350,7 +350,8 @@ def q_zorder_locality(dialect: str) -> str:
     ``row_number() OVER (ORDER BY ...)`` windows below (each a
     single-partition sort of the whole fact table — fine in DuckDB's
     in-memory oracle role, a one-task bottleneck on a cluster) with the
-    two-phase partition-offset rank (operators/shuffle_tools.global_rank)."""
+    two-pass partition-offset rank (operators/shuffle_tools.running_sum of
+    1 per row, plus 1)."""
     return f"""
 WITH z AS ({zorder_z_sql(dialect)}),
 chunked AS (
@@ -385,17 +386,19 @@ def q_zorder_locality_df(spark, sf_dir: str):
     """Spark-side zorder_locality (see :func:`q_zorder_locality` for the
     semantics and the DuckDB oracle): identical relation, but the two
     exact global ranks (arrival by event_id, z-order by (zkey, event_id))
-    come from the two-phase partition-offset index instead of
-    unpartitioned row_number windows, so no single task ever holds the
-    fact table.  Ranks are exact (total orders — event_id is unique), so
-    chunk assignment and every downstream aggregate are bit-identical to
-    the window form; chunk = (rank-1) div 256 is the integer twin of
-    floor((rank-1)/256.0).  The z relation is scanned twice per ordering
-    (the rank helper's counts pass + join pass) — column-pruned parquet
-    scans, the price of never materializing a global sort on one task."""
+    come from the two-pass partition-offset index
+    (operators/shuffle_tools.running_sum of 1 per row, i.e. rank - 1)
+    instead of unpartitioned row_number windows, so no single task ever
+    holds the fact table.  Ranks are exact (total orders — event_id is
+    unique), so chunk assignment and every downstream aggregate are
+    bit-identical to the window form; chunk = index div 256 is the
+    integer twin of floor((rank-1)/256.0).  The z relation is scanned
+    twice per ordering (the range partitioner's sample + the shuffle) —
+    column-pruned parquet scans, the price of never materializing a
+    global sort on one task."""
     from pyspark.sql import functions as F
 
-    from summarydb_spark.operators.shuffle_tools import global_rank
+    from summarydb_spark.operators.shuffle_tools import running_sum
     from summarydb_spark.sources.tables import register_tables
 
     register_tables(spark, sf_dir)
@@ -405,11 +408,11 @@ def q_zorder_locality_df(spark, sf_dir: str):
         ("arrival", ["event_id"]),
         ("zorder", ["zkey", "event_id"]),
     ):
-        r = global_rank(z, cols, out_col="_rnk")
+        r = running_sum(z, cols, out_col="_ix")
         legs.append(
             r.select(
                 F.lit(ordering).alias("ordering"),
-                F.expr("(_rnk - 1) div 256").alias("chunk"),
+                F.expr("_ix div 256").alias("chunk"),
                 "ub",
                 "db",
             )
@@ -438,7 +441,7 @@ def q_zorder_locality_df(spark, sf_dir: str):
 def _rrf_scored_sql(dialect: str) -> tuple[str, str]:
     """The two SCORED (pre-rank) relations hybrid RRF fuses, factored so
     the DuckDB oracle (window ranks) and the Spark plan (two-phase
-    global_rank) share one scoring definition: ``(text_sql, dense_sql)``
+    running_sum) share one scoring definition: ``(text_sql, dense_sql)``
     emitting (doc_id, s BIGINT) and (doc_id, cosv DOUBLE)."""
     toks = _split_tokens(dialect)
     if dialect == "spark":
@@ -559,25 +562,25 @@ def q_hybrid_rrf_fusion_df(spark, sf_dir: str):
     """Spark-side hybrid_rrf_fusion (see :func:`q_hybrid_rrf_fusion` for
     semantics and the DuckDB oracle): the scored relations come from the
     shared SQL (:func:`_rrf_scored_sql`), each system's exact rank from
-    operators/shuffle_tools.global_rank over (score DESC, doc_id) — a
+    1 + operators/shuffle_tools.running_sum over (score DESC, doc_id) — a
     range shuffle + partition-offset fixup, never a one-task sort of the
     candidate relation — and the fusion is a doc_id equi-join with the
     oracle's own rrf expression text, cut by TakeOrdered top-15."""
     from pyspark.sql import functions as F
 
-    from summarydb_spark.operators.shuffle_tools import global_rank
+    from summarydb_spark.operators.shuffle_tools import running_sum
     from summarydb_spark.sources.tables import register_tables
 
     register_tables(spark, sf_dir)
     text_sql, dense_sql = _rrf_scored_sql("spark")
-    rt = global_rank(
+    rt = running_sum(
         spark.sql(text_sql), [F.col("s").desc(), F.col("doc_id")], out_col="r"
-    ).select(F.col("doc_id").alias("t_doc"), F.col("r").alias("t_r"))
-    rd = global_rank(
+    ).select(F.col("doc_id").alias("t_doc"), (F.col("r") + 1).alias("t_r"))
+    rd = running_sum(
         spark.sql(dense_sql),
         [F.col("cosv").desc(), F.col("doc_id")],
         out_col="r",
-    ).select(F.col("doc_id").alias("d_doc"), F.col("r").alias("d_r"))
+    ).select(F.col("doc_id").alias("d_doc"), (F.col("r") + 1).alias("d_r"))
     fused = rt.join(rd, rt.t_doc == rd.d_doc, "full_outer").select(
         F.expr("coalesce(t_doc, d_doc)").alias("doc_id"),
         F.expr("CAST(coalesce(t_r, 0) AS BIGINT)").alias("rank_text"),

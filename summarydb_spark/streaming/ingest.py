@@ -53,7 +53,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from summarydb_spark.operators.incremental import merge_summary_increment
-from summarydb_spark.operators.summary import SUMMARY_COLS
+from summarydb_spark.operators.summary import SUMMARY_COLS, SUMMARY_SCHEMA
 from summarydb_spark.session import local_frame
 
 
@@ -96,7 +96,13 @@ def load_state_df(
     if v is None:
         return None, None
     vdir = os.path.join(state_dir, f"v={v}")
-    df = spark.read.parquet(os.path.join(vdir, "summary.parquet"))
+    # the fixed schema skips the schema-inference job; a fold snapshot is
+    # not partitioned, so the store's sid column is dropped again
+    df = (
+        spark.read.schema(SUMMARY_SCHEMA)
+        .parquet(os.path.join(vdir, "summary.parquet"))
+        .drop("sid")
+    )
     sp = os.path.join(vdir, "state.parquet")
     if os.path.isdir(sp):
         # legacy layout: counters materialized per batch

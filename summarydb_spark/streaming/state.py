@@ -135,44 +135,20 @@ def stream_shuffle_partitions(
     return max(floor, min(cap, n))
 
 
-def ephemeral_checkpoint_base() -> str:
-    """Base directory for EPHEMERAL streaming checkpoints (the
-    verification gates' memory-sink queries, whose checkpoint Spark
-    itself would otherwise create as a temp dir and delete on stop).
-
-    Defaults to tmpfs (``/dev/shm``) when present: every state-store
-    commit and offset/commit-log write fsyncs, and on a disk-backed
-    temp dir those fsyncs are pure fixed cost per micro-batch
-    (measured 0.46 ms vs 0.01 ms per 4 KB fsync-write here — dozens of
-    such files per batch across state partitions x stores).  Durable
-    deployments pass an explicit ``checkpointLocation`` on real
-    storage (streaming/ingest.py's API contract); this base is ONLY
-    for checkpoints that die with the query.  Override with
-    ``SPARK_GRAFT_STREAM_CKPT_DIR``."""
-    env = os.environ.get("SPARK_GRAFT_STREAM_CKPT_DIR")
-    if env:
-        return env
-    if os.path.isdir("/dev/shm") and os.access("/dev/shm", os.W_OK):
-        return "/dev/shm/sdb_stream_ckpt"
-    import tempfile
-
-    return os.path.join(tempfile.gettempdir(), "sdb_stream_ckpt")
-
-
 @contextmanager
 def ephemeral_checkpoint():
-    """Yield a fresh checkpoint directory under
-    :func:`ephemeral_checkpoint_base` and remove it afterwards.  Each
-    query start gets its OWN directory — a reused checkpoint would
-    replay committed offsets and silently skip the source data on the
-    next run (memory sinks are rebuilt per query, so the sink would be
-    empty/stale: correctness, not just staleness)."""
+    """Yield a fresh checkpoint directory under the system temp dir
+    for a query whose checkpoint dies with it (the verification gates'
+    memory-sink queries), and remove it afterwards.  Each query start
+    gets its OWN directory — a reused checkpoint would replay committed
+    offsets and silently skip the source data on the next run (memory
+    sinks are rebuilt per query, so the sink would be empty/stale:
+    correctness, not just staleness).  Durable deployments pass an
+    explicit ``checkpointLocation`` on real storage."""
     import shutil
-    import uuid
+    import tempfile
 
-    base = ephemeral_checkpoint_base()
-    path = os.path.join(base, uuid.uuid4().hex)
-    os.makedirs(path, exist_ok=True)
+    path = tempfile.mkdtemp(prefix="sdb_stream_ckpt_")
     try:
         yield path
     finally:

@@ -370,24 +370,25 @@ def test_minhash_empty_shingles_never_pair(spark):
     assert got == {(0, 1, 1.0)}
 
 
-def test_release_guard_caches(spark):
+def test_release_transient_caches_drops_guard_relations(spark):
     """The guard's persisted member/bucket relations are registered and
     released by the public hook (round-9 ADVICE: distinct corpora in one
     session otherwise accumulate cached plans for the session lifetime)."""
     from summarydb_spark.functions import dedup as D
+    from summarydb_spark.operators import cache_scope
 
     df = spark.createDataFrame(
         [(0, "en", 0, [1, 2, 3]), (1, "en", 0, [1, 2, 3])],
         "doc_id long, lang string, len_bucket long, sh array<long>",
     )
-    D.release_guard_caches()  # drain anything earlier tests left
+    cache_scope.release_transient_caches()  # drain anything earlier tests left
     D.banded_jaccard_pairs(df, 0.1).collect()
-    assert len(D._GUARD_PERSISTED) >= 2  # members + all_buckets
-    released = D.release_guard_caches()
+    assert len(cache_scope._PERSISTED) >= 2  # members + all_buckets
+    released = cache_scope.release_transient_caches()
     assert released >= 2
-    assert D._GUARD_PERSISTED == []
+    assert cache_scope._PERSISTED == []
     # idempotent + guard still works after release
-    assert D.release_guard_caches() == 0
+    assert cache_scope.release_transient_caches() == 0
     assert D.banded_jaccard_pairs(df, 0.1).count() == 1
 
 

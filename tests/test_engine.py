@@ -129,29 +129,6 @@ def test_out_of_order_clamp(spark, tmp_path):
     assert [r["ts"] for r in ev] == [5, 6, 7, 9]
 
 
-def test_range_index_mode_matches_window_mode(spark):
-    """few-giant-streams path: range-partitioned two-pass indexing must
-    produce the identical summary as the per-stream window sort."""
-    from pyspark.sql import Row
-
-    from summarydb_spark.operators.summary import build_summary_windows
-    from summarydb_spark.windowing import ExpWindowing
-
-    rows = [
-        Row(stream_id=sid, ts=i * 3 + sid, value=i * 0.5, seq=i)
-        for sid in (0, 1)
-        for i in range(211)
-    ]
-    df = spark.createDataFrame(rows, "stream_id long, ts long, value double, seq long")
-    a = build_summary_windows(df, ExpWindowing(2.0), order_cols=("seq",))
-    b = build_summary_windows(
-        df, ExpWindowing(2.0), order_cols=("seq",), index_mode="range"
-    )
-    ka = sorted(tuple(r) for r in a.collect())
-    kb = sorted(tuple(r) for r in b.collect())
-    assert ka == kb
-
-
 def test_bulk_landmark_never_touches_driver(spark, tmp_path, monkeypatch):
     """A landmark bracket holds raw points of arbitrary span (the reference
     buffers them in core/landmark_window.go); at scale they must stage

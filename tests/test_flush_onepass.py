@@ -10,7 +10,9 @@ sizes from the registry.
 - UDF fallback: a general policy binned by the pandas UDF next to an
   exp2 config buckets only its own rows there;
 - guard: a registry size that disagrees with a stream's events raises in
-  the JVM binning guard instead of binning silently.
+  the JVM binning guard instead of binning silently;
+- schema'd reads: a warm flush plus one ``Stream.query`` reads the
+  summary store without schema-inference jobs.
 """
 
 import numpy as np
@@ -291,3 +293,41 @@ def test_registry_size_mismatch_raises_in_binning_guard(spark, tmp_path):
     st.meta.n += 7  # the registry now disagrees with the stream's events
     with pytest.raises(Exception, match="was not enumerated"):
         db.flush()
+
+
+
+def test_warm_flush_and_query_read_the_summary_store_with_its_schema(spark, tmp_path):
+    """The summary store's schema is fixed (``SUMMARY_SCHEMA``), so the
+    carry-over read of a warm flush and the pruned scan of
+    ``Stream.query`` pass it instead of running a one-task
+    schema-inference job each.  On a 6-stream DB (ExpWindowing(2) and
+    PowerWindowing(1,1,1,1), summary ops only) the pair runs 4 Spark
+    jobs, counted through a job group, where inferred schemas made it 6;
+    a full-range sum is still exact."""
+    rng = np.random.default_rng(5)
+    db = SummaryDB(spark, str(tmp_path / "db"))
+    for sid in range(6):
+        db.new_stream(
+            windowing=ExpWindowing(2.0) if sid % 2 == 0 else PowerWindowing(1, 1, 1, 1),
+            stream_id=sid,
+        )
+        _append(db, sid, rng, 200)
+    db.flush()
+    for sid in range(6):
+        _append(db, sid, rng, 100)
+    st = db.get_stream(3)
+    sc = spark.sparkContext
+    group = "test-warm-flush-query-jobs"
+    sc.setJobGroup(group, "warm flush + Stream.query")
+    try:
+        db.flush()
+        r = st.query("sum", T0, st.meta.last_ts)
+    finally:
+        sc._jsc.clearJobGroup()
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    want = db.events().where(F.col("stream_id") == 3).agg(
+        F.count(F.lit(1)).alias("n"), F.sum("value").alias("s")
+    ).first()
+    assert want["n"] == 300
+    assert (r.value, r.error) == (want["s"], 0.0)
+    assert 0 < jobs < 6, jobs

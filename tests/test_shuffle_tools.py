@@ -113,15 +113,14 @@ def test_bucketed_join_has_no_exchange(spark, events, dim, tmp_path_factory):
 
 
 def test_global_rank_matches_window_row_number(spark, events):
-    """global_rank must equal row_number() OVER (ORDER BY ...) exactly —
-    ascending, descending, and multi-column orders — without planning an
-    unpartitioned WindowExec over the input (round-9 VERDICT item 1)."""
+    """running_sum + 1 (the global rank) must equal row_number() OVER
+    (ORDER BY ...) exactly — ascending, descending, and multi-column
+    orders — without planning an unpartitioned WindowExec over the input
+    (round-9 VERDICT item 1)."""
     from pyspark.sql import Window
 
-    from summarydb_spark.operators.shuffle_tools import (
-        global_rank,
-        release_rank_caches,
-    )
+    from summarydb_spark.operators.cache_scope import release_transient_caches
+    from summarydb_spark.operators.shuffle_tools import running_sum
 
     cases = [
         (["event_id"], [F.col("event_id").asc()]),
@@ -131,8 +130,8 @@ def test_global_rank_matches_window_row_number(spark, events):
     for rank_order, win_order in cases:
         got = {
             (r["event_id"], r["rnk"])
-            for r in global_rank(events, rank_order, out_col="rnk")
-            .select("event_id", "rnk")
+            for r in running_sum(events, rank_order, out_col="ix")
+            .select("event_id", (F.col("ix") + 1).alias("rnk"))
             .collect()
         }
         want = {
@@ -144,18 +143,16 @@ def test_global_rank_matches_window_row_number(spark, events):
             .collect()
         }
         assert got == want
-    assert release_rank_caches() >= 2
+    assert release_transient_caches() >= 2
 
 
 def test_global_rank_empty_input(spark, events):
-    from summarydb_spark.operators.shuffle_tools import (
-        global_rank,
-        release_rank_caches,
-    )
+    from summarydb_spark.operators.cache_scope import release_transient_caches
+    from summarydb_spark.operators.shuffle_tools import running_sum
 
     empty = events.where(F.lit(False))
-    assert global_rank(empty, ["event_id"]).count() == 0
-    release_rank_caches()
+    assert running_sum(empty, ["event_id"]).count() == 0
+    release_transient_caches()
 
 
 def test_partitioned_prefix_sum_matches_window(spark):
@@ -164,10 +161,8 @@ def test_partitioned_prefix_sum_matches_window(spark):
     exists for) and with NULL values (accumulate as 0, like SQL sum)."""
     from pyspark.sql import Window
 
-    from summarydb_spark.operators.shuffle_tools import (
-        partitioned_prefix_sum,
-        release_rank_caches,
-    )
+    from summarydb_spark.operators.cache_scope import release_transient_caches
+    from summarydb_spark.operators.shuffle_tools import running_sum
 
     rows = [(("big" if i % 20 != 0 else f"s{i % 3}"), i,
              None if i % 97 == 0 else (i * 7) % 101) for i in range(5000)]
@@ -175,8 +170,8 @@ def test_partitioned_prefix_sum_matches_window(spark):
 
     got = {
         (r["lang"], r["doc_id"], r["pc"])
-        for r in partitioned_prefix_sum(
-            df, "lang", ["doc_id"], "n_tok", out_col="pc"
+        for r in running_sum(
+            df, ["doc_id"], val_col="n_tok", part_col="lang", out_col="pc"
         ).collect()
     }
     w = (
@@ -191,4 +186,71 @@ def test_partitioned_prefix_sum_matches_window(spark):
         ).collect()
     }
     assert got == want
-    release_rank_caches()
+    release_transient_caches()
+
+
+def _cached_legs(df):
+    """(cache ids read by the join's left leg, by its right leg) in the
+    optimized plan of a running_sum result — the left leg is the fixup
+    join's row side, the right leg the broadcast per-partition totals."""
+    jvm = df.sparkSession._jvm
+
+    def cache_ids(node) -> set:
+        if node.nodeName() == "InMemoryRelation":
+            return {jvm.System.identityHashCode(node.cacheBuilder())}
+        kids = node.children()
+        return set().union(*[cache_ids(kids.apply(i)) for i in range(kids.size())])
+
+    def find_join(node):
+        if node.nodeName() == "Join":
+            return node
+        kids = node.children()
+        for i in range(kids.size()):
+            j = find_join(kids.apply(i))
+            if j is not None:
+                return j
+        return None
+
+    join = find_join(df._jdf.queryExecution().optimizedPlan())
+    assert join is not None
+    return cache_ids(join.left()), cache_ids(join.right())
+
+
+def test_running_sum_pins_one_cached_relation(spark, events):
+    """Both passes of the running sum — the per-partition totals and the
+    fixup join — must read ONE cached relation, so the two range shuffles
+    cannot disagree on partitioning (a silently empty join leg).  Holds
+    grouped and ungrouped, under a descending order and on empty input;
+    the descending grouped sums also equal the window form."""
+    from pyspark.sql import Window
+
+    from summarydb_spark.operators.cache_scope import transient_cache_scope
+    from summarydb_spark.operators.shuffle_tools import running_sum
+
+    grouped = events.withColumn("g", F.col("user_id") % 3)
+    with transient_cache_scope():
+        calls = [
+            running_sum(events, ["event_id"]),
+            running_sum(events, [F.col("value").desc(), F.col("event_id")]),
+            running_sum(
+                grouped, [F.col("event_id").desc()], val_col="user_id", part_col="g"
+            ),
+            running_sum(events.where(F.lit(False)), ["event_id"]),
+            running_sum(
+                grouped.where(F.lit(False)), ["event_id"], val_col="user_id", part_col="g"
+            ),
+        ]
+        for out in calls:
+            left, right = _cached_legs(out)
+            assert len(left) == 1 and left == right, (left, right)
+        assert calls[3].count() == 0 and calls[4].count() == 0
+
+        w = (
+            Window.partitionBy("g")
+            .orderBy(F.col("event_id").desc())
+            .rowsBetween(Window.unboundedPreceding, -1)
+        )
+        want = grouped.withColumn(
+            "running_sum", F.coalesce(F.sum("user_id").over(w), F.lit(0)).cast("long")
+        )
+        assert _canon(calls[2]) == _canon(want)

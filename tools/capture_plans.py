@@ -1,8 +1,9 @@
-"""Capture .explain("formatted") for declared queries into plans/r10/.
+"""Capture .explain("formatted") for declared queries into .plan_dumps/
+(git-ignored: the dumps are for diffing a change locally, not for the repo).
 
 Usage:
-    python tools/capture_plans.py before [query ...]   # -> plans/r10/<q>_before.txt
-    python tools/capture_plans.py after  [query ...]   # -> plans/r10/<q>_after.txt
+    python tools/capture_plans.py before [query ...]   # -> .plan_dumps/<q>_before.txt
+    python tools/capture_plans.py after  [query ...]   # -> .plan_dumps/<q>_after.txt
 
 With no query list, captures every declared query.  Streaming gates
 execute their stream when the builder runs; their captured plan is the
@@ -67,9 +68,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     out_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "plans",
-        os.environ.get("SPARK_GRAFT_PLAN_ROUND", "r11"),
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".plan_dumps"
     )
     os.makedirs(out_dir, exist_ok=True)
 
